@@ -189,6 +189,29 @@ object Bench {
     val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
   }
 
+  /** A fresh streaming-soak work dir for `f`, deleted when `f` returns or
+    * throws. */
+  private def withWorkDir[T](f: String => T): T = {
+    val work = s"${System.getProperty("java.io.tmpdir")}/graft_strm_" +
+      java.util.UUID.randomUUID().toString.take(8)
+    try f(work)
+    finally org.apache.hadoop.fs.FileSystem
+      .getLocal(new org.apache.hadoop.conf.Configuration())
+      .delete(new org.apache.hadoop.fs.Path(work), true)
+  }
+
+  /** Wait for a soak query to drain. One still running after 600 s is
+    * stopped and fails its row, rather than reading as a 600 s time. */
+  private def awaitSoak(q: org.apache.spark.sql.streaming.StreamingQuery,
+                        name: String): Long = {
+    if (!q.awaitTermination(600000)) {
+      q.stop()
+      throw new java.util.concurrent.TimeoutException(
+        s"$name: stream still running after 600 s")
+    }
+    0L
+  }
+
   /** The soak corpus: sf documents at 1x, or replicated 10x with
     * per-replica perturbation (distinct suffix token per replica so
     * fingerprints/shingles don't collapse to exact duplicates). */
@@ -287,10 +310,8 @@ object Bench {
       // Kafka in production swaps the source line only). Fixture prep
       // (writing the source parquet) happens OUTSIDE the timed region;
       // the timed region is sink wiring + the full streaming run.
-      "soak_stream_ingest" -> ((s, d) => {
+      "soak_stream_ingest" -> ((s, d) => withWorkDir { work =>
         import org.apache.spark.sql.functions._
-        val work = s"${System.getProperty("java.io.tmpdir")}/graft_strm_" +
-          java.util.UUID.randomUUID().toString.take(8)
         val src = s"$work/src"
         Tables.load(s, d, "events")
           .select(pmod(col("user_id"), lit(4)).cast("int")
@@ -310,14 +331,12 @@ object Bench {
             col("kafka_partition"), col("offset"),
             payloadCols = Seq(col("offset"), col("event_type"),
               col("value")))
-          q.awaitTermination(600000); 0L
+          awaitSoak(q, "soak_stream_ingest")
         }
         graft.analytics.Caches.clear(); t
       }),
-      "soak_stream_hll" -> ((s, d) => {
+      "soak_stream_hll" -> ((s, d) => withWorkDir { work =>
         import org.apache.spark.sql.functions._
-        val work = s"${System.getProperty("java.io.tmpdir")}/graft_strm_" +
-          java.util.UUID.randomUUID().toString.take(8)
         val src = s"$work/src"
         Tables.load(s, d, "events")
           .select(col("event_type"), col("user_id"))
@@ -331,15 +350,13 @@ object Bench {
             .trigger(
               org.apache.spark.sql.streaming.Trigger.AvailableNow())
             .option("checkpointLocation", s"$work/ckpt").start()
-          q.awaitTermination(600000); 0L
+          awaitSoak(q, "soak_stream_hll")
         }
         graft.analytics.Caches.clear(); t
       }),
-      "soak_stream_dhash" -> ((s, d) => {
+      "soak_stream_dhash" -> ((s, d) => withWorkDir { work =>
         import org.apache.spark.sql.functions._
         import s.implicits._
-        val work = s"${System.getProperty("java.io.tmpdir")}/graft_strm_" +
-          java.util.UUID.randomUUID().toString.take(8)
         val src = s"$work/src"
         // deterministic synthetic PNG stream (the mm fixture's shape:
         // ids sized (id%31+1, id%17+1)); history = every 3rd image
@@ -363,7 +380,7 @@ object Bench {
               (b: org.apache.spark.sql.DataFrame, _: Long) =>
                 gate(b).write.format("noop").mode("overwrite").save(); ()
             }.start()
-          q.awaitTermination(600000); 0L
+          awaitSoak(q, "soak_stream_dhash")
         }
         graft.analytics.Caches.clear(); t
       }))
@@ -690,11 +707,18 @@ object Bench {
     // gate. Each side is a nameable soak component, so ab_replay
     // adjudicates a streaming alarm with the standard isolated
     // min-of-reps discipline; committed stats live in this block.
+    val streamingTimes = Seq("soak_stream_ingest", "soak_stream_hll",
+      "soak_stream_dhash").map { n =>
+      n -> (try soakComponents(n)(spark, sfDir)
+            catch { case e: Throwable =>
+              System.err.println(s"[bench] $n failed: ${e.getMessage}")
+              -1.0
+            })
+    }.toMap
     val streamingBlock = {
-      def c(n: String): Double = soakComponents(n)(spark, sfDir)
-      val i = c("soak_stream_ingest")
-      val h = c("soak_stream_hll")
-      val g = c("soak_stream_dhash")
+      val i = streamingTimes("soak_stream_ingest")
+      val h = streamingTimes("soak_stream_hll")
+      val g = streamingTimes("soak_stream_dhash")
       f"""{"ingest_sec":$i%.3f,"hll_sec":$h%.3f,"dhash_gate_sec":$g%.3f}"""
     }
     // Failures must be machine-loud, not just a -1.0 sentinel buried in the
@@ -703,7 +727,8 @@ object Bench {
     val grouped =
       results ++ r7 ++ r9 ++ r10 ++ r11 ++ r12 ++ r13 ++ r14 ++ r15 ++ r16
     val failed = grouped.collect { case (k, ts) if groupStat(k, ts) < 0 => k } ++
-      sweep.collect { case (k, ts) if minOf(ts) < 0 => k }
+      sweep.collect { case (k, ts) if minOf(ts) < 0 => k } ++
+      streamingTimes.collect { case (k, t) if t < 0 => k }.toSeq.sorted
     val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val spread = spreadJson(grouped)
     // machine-parsed coverage accounting: the artifact itself must state

@@ -75,12 +75,6 @@ object AsOf {
       rightCols.map(c => col("_match." + c).as(c)): _*)
   }
 
-  /** Range join: equi-key plus `rightTs` in (leftTs - before, leftTs]. */
-  def rangeJoin(left: DataFrame, right: DataFrame, key: String,
-                leftTs: Column, rightTs: Column, before: Column): DataFrame =
-    left.join(right, left(key) === right(key) &&
-      rightTs > leftTs - before && rightTs <= leftTs)
-
   /** Band (interval) join with NO equi key: all (l, r) with
     * |leftTs - rightTs| <= delta. Spark plans a bare interval predicate as
     * a BroadcastNestedLoopJoin — O(|L|·|R|) at any scale. This is the

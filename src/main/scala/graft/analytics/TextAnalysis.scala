@@ -64,10 +64,6 @@ object TextAnalysis {
     round(size(array_distinct(tokens(text))) /
       greatest(tokenCount(text), lit(1)).cast("double"), 6)
 
-  def meanTokenLen(text: Column): Column =
-    round((length(text) - tokenCount(text) + 1) /
-      greatest(tokenCount(text), lit(1)).cast("double"), 6)
-
   /** Gopher-ish keep/drop quality gate over the features above. */
   def qualityKeep(text: Column, minTokens: Int = 5, maxTokens: Int = 100000,
                   maxPunctRatio: Double = 0.3): Column =

@@ -4,7 +4,10 @@ import org.apache.avro.{LogicalTypes, Schema, SchemaBuilder}
 import org.apache.avro.file.{CodecFactory, DataFileWriter}
 import org.apache.avro.generic.{GenericData, GenericDatumWriter, GenericRecord}
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.mapreduce.TaskAttemptContext
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.execution.datasources.{OutputWriter, OutputWriterFactory}
 import org.apache.spark.sql.types._
 
 import scala.collection.JavaConverters._
@@ -13,11 +16,9 @@ import scala.collection.JavaConverters._
   * (reference: format/avro/AvroRecordWriterProvider.java:61-121).
   *
   * The environment ships Avro core but not the spark-avro DataFrameWriter
-  * module, so Avro files are written directly: rows are hash-partitioned by
-  * file group and sorted by (group, offset), then each task streams its
-  * contiguous groups through a DataFileWriter straight to the final object
-  * key — no staging rename. Deterministic names make replay idempotent
-  * (overwrite=true), same X1 contract as the staged formats.
+  * module, so Avro files are encoded here: [[factory]] streams a file
+  * group's rows through a DataFileWriter inside the write pass of
+  * [[IngestWriter]], which owns grouping, ordering and the commit.
   */
 object AvroGroupWriter {
 
@@ -169,7 +170,7 @@ object AvroGroupWriter {
 
   // ---- read-back (the inverse decode) ----------------------------------
 
-  /** Read Avro container files written by [[write]] back as rows of
+  /** Read Avro container files written by [[factory]] back as rows of
     * `payload` — the relational face of the decode the specs do by hand.
     * Each file decodes on an executor through the FileSystem API (so
     * paths may be any Hadoop scheme); parallelism is file-grained, the
@@ -248,59 +249,29 @@ object AvroGroupWriter {
     case (x, _) => x
   }
 
-  /** Write `df` (carrying `epartCol`/`fnameCol` group columns) as one Avro
-    * container file per (encodedPartition, fileName), rows in `orderCol`
-    * order, directly at `<topicDir>/<epart>/<fname>`. Returns the manifest. */
-  def write(df: DataFrame, epartCol: String, fnameCol: String,
-            orderCol: String, payload: StructType, topicDir: String,
-            codec: Option[String]): Seq[IngestWriter.FileInfo] = {
-    val avroSchemaJson = structToAvro(payload, "record").toString
-    val hadoopConf = new org.apache.spark.util.SerializableConfiguration(
-      df.sparkSession.sparkContext.hadoopConfiguration)
-    val payloadFields = payload.fieldNames.toSeq
-    val codecName = codec.getOrElse("null")
-
-    import org.apache.spark.sql.functions.col
-    val arranged = df
-      .repartition(col(epartCol), col(fnameCol))
-      .sortWithinPartitions(col(epartCol), col(fnameCol), col(orderCol))
-
-    val infos = arranged.toDF().rdd.mapPartitions { rows =>
-      val schema = new Schema.Parser().parse(avroSchemaJson)
-      val fs = FileSystem.get(new java.net.URI(topicDir),
-        hadoopConf.value)
-      var currentKey: (String, String) = null
-      var writer: DataFileWriter[GenericRecord] = null
-      val out = scala.collection.mutable.ArrayBuffer.empty[IngestWriter.FileInfo]
-      def close(): Unit = if (writer != null) { writer.close(); writer = null }
-      val result = rows.flatMap { row =>
-        val epart = row.getAs[String](epartCol)
-        val fname = row.getAs[String](fnameCol)
-        if ((epart, fname) != currentKey) {
-          close()
-          currentKey = (epart, fname)
-          val dest = new Path(s"$topicDir/$epart/$fname")
-          fs.mkdirs(dest.getParent)
-          writer = new DataFileWriter[GenericRecord](
-            new GenericDatumWriter[GenericRecord](schema))
-          codecName match {
-            case "null" | "none" => ()
-            case "deflate" => writer.setCodec(CodecFactory.deflateCodec(6))
-            case c => writer.setCodec(CodecFactory.fromString(c))
-          }
-          writer.create(schema, fs.create(dest, true))
-          out += IngestWriter.FileInfo(epart, fname, dest.toString)
+  /** The W1 encoder of the write pass ([[IngestWriter]]): one container
+    * file per object, each row converted through [[rowToRecord]] against
+    * the Avro schema of its view. */
+  def factory(codec: Option[String]): OutputWriterFactory =
+    new IngestWriter.StreamWriterFactory {
+      def newInstance(file: String, payload: StructType,
+                      context: TaskAttemptContext): OutputWriter = {
+        val schema = structToAvro(payload, "record")
+        val toRow = CatalystTypeConverters.createToScalaConverter(payload)
+        val writer = new DataFileWriter[GenericRecord](
+          new GenericDatumWriter[GenericRecord](schema))
+        codec.getOrElse("null") match {
+          case "null" | "none" => ()
+          case "deflate" => writer.setCodec(CodecFactory.deflateCodec(6))
+          case c => writer.setCodec(CodecFactory.fromString(c))
         }
-        val payloadRow = Row.fromSeq(payloadFields.map(f => row.getAs[Any](f)))
-        writer.append(rowToRecord(payloadRow, payload, schema))
-        Iterator.empty[IngestWriter.FileInfo]
-      } ++ {
-        close()
-        out.iterator
+        writer.create(schema, create(file, context))
+        new OutputWriter {
+          def write(row: InternalRow): Unit = writer.append(
+            rowToRecord(toRow(row).asInstanceOf[Row], payload, schema))
+          def close(): Unit = writer.close()
+          def path(): String = file
+        }
       }
-      result
-    }.collect().toSeq
-
-    infos.sortBy(f => (f.encodedPartition, f.fileName))
-  }
+    }
 }

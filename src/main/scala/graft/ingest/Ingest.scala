@@ -118,35 +118,27 @@ object Ingest {
       case None => (cleaned, Nil)
     }
     val labeledGroups = timeGroup ++ extraCauseGroups
-    val extraGroups = labeledGroups.map(_._2)
-    // manifest stats and per-cause diagnostics re-traverse the batch after
-    // the write; without a persist each extra pass re-reads the SOURCE
-    // (in foreachBatch the batch is a plan over source files, not
-    // materialized data) — at 100 TB that doubles micro-batch input I/O.
-    // Scoped: the cache lives exactly as long as the passes that share it
-    // — every action over it runs inside this block, so BATCH callers
-    // looping Ingest.run leak nothing and need no Caches.clear().
+    val grouped = IngestWriter.group(framed, cfg, encoded, kafkaPartition,
+      offset, labeledGroups.map(_._2))
+    // manifest stats and per-cause diagnostics read the grouping again
+    // after the write; without a persist each would re-read the SOURCE (in
+    // foreachBatch the batch is a plan over source files) and re-shuffle.
+    // Scoped: the cache lives exactly as long as the passes that share it,
+    // so BATCH callers looping Ingest.run leak nothing.
     val (files, byCause) = graft.analytics.Caches.scoped {
-      val cached =
+      val shared =
         if (writeManifest || causeStats)
-          graft.analytics.Caches.persist(framed)
-        else framed
-      val written =
-        if (cfg.writeKeys || cfg.writeHeaders)
-          IngestWriter.writeKVH(cached, cfg, encoded, outDir, kafkaPartition,
-            offset, payloadCols, extraFileGroups = extraGroups)
-        else
-          IngestWriter.write(cached, cfg, encoded, outDir, kafkaPartition,
-            offset, payloadCols, extraFileGroups = extraGroups)
+          graft.analytics.Caches.persist(grouped)
+        else grouped
+      val written = IngestWriter.writeGroups(shared, cfg, outDir,
+        kafkaPartition, offset, IngestWriter.views(cfg, payloadCols))
       val causes =
         if (causeStats)
-          RotationStats.causes(cached, cfg, encoded, kafkaPartition, offset,
-            labeledGroups)
+          RotationStats.causes(shared, cfg, kafkaPartition, labeledGroups)
         else Map.empty[String, Long]
       fence.foreach { case (f, e) => f.check(e) }
       if (writeManifest)
-        CommitManifest.write(cached, cfg, encoded, outDir, kafkaPartition,
-          offset, extraGroups)
+        CommitManifest.write(shared, cfg, outDir, kafkaPartition, offset)
       (written, causes)
     }
     val stats = RotationStats.of(files).copy(byCause = byCause)
@@ -270,18 +262,13 @@ object RotationStats {
     RotationStats(files.size,
       files.groupBy(_.encodedPartition).map { case (p, fs) => p -> fs.size })
 
-  /** Classify every file boundary by cause. One aggregation to one row per
-    * file plus one window over the (small) per-file frame — diagnostic
-    * metadata volume is #files, never #records. */
-  def causes(df: DataFrame, cfg: IngestConfig, encodedPartition: Column,
-             kafkaPartition: Column, offset: Column,
-             labeledGroups: Seq[(String, Column)]): Map[String, Long] = {
+  /** Classify every file boundary of the writer's grouping by cause. One
+    * aggregation to one row per file plus one window over the (small)
+    * per-file frame — diagnostic metadata volume is #files, never #records. */
+  private[ingest] def causes(grouped: DataFrame, cfg: IngestConfig,
+                             kafkaPartition: Column,
+                             labeledGroups: Seq[(String, Column)]): Map[String, Long] = {
     import org.apache.spark.sql.expressions.Window
-    val groupKey = Seq(kafkaPartition, encodedPartition) ++
-      labeledGroups.map(_._2)
-    val grouped = Rotation.assignSizeFiles(
-      df.withColumn("__epart", encodedPartition), struct(groupKey: _*),
-      offset, cfg.flushSize)
     val gCols = labeledGroups.zipWithIndex.map { case ((_, c), i) =>
       first(c).as(s"__g$i")
     }
@@ -329,13 +316,10 @@ object RotationStats {
   * committed objects as orphans. The union of all `commit-*.json` files
   * vouches for the whole lake. */
 object CommitManifest {
-  def write(df: DataFrame, cfg: IngestConfig, encodedPartition: Column,
-            outDir: String, kafkaPartition: Column, offset: Column,
-            extraGroups: Seq[Column]): String = {
-    val groupKey = Seq(kafkaPartition, encodedPartition) ++ extraGroups
-    val grouped = Rotation.assignSizeFiles(
-      df.withColumn("__epart", encodedPartition), struct(groupKey: _*),
-      offset, cfg.flushSize)
+  /** One generation over the writer's grouping (`IngestWriter.group`). */
+  private[ingest] def write(grouped: DataFrame, cfg: IngestConfig,
+                            outDir: String, kafkaPartition: Column,
+                            offset: Column): String = {
     // per-object [min,max] of the configured stats columns ride the
     // same aggregate — zero extra passes; the static double/string lane
     // pair keeps the manifest schema identical across lakes with
@@ -344,7 +328,7 @@ object CommitManifest {
       count(lit(1)).as("record_count")) ++
       (if (cfg.statsColumns.isEmpty) Nil
        else Seq(array(cfg.statsColumns.map(c =>
-         statStruct(df, c)): _*).as("col_stats")))
+         statStruct(grouped, c)): _*).as("col_stats")))
     val stats = grouped
       .groupBy(col("__epart").as("encoded_partition"),
         kafkaPartition.as("kafka_partition"),
@@ -398,7 +382,7 @@ object CommitManifest {
     * range and the order-independent key-set hash that name the file come
     * from reading back the single written part file — a metadata-scale
     * read, not a second pass over the lake. The final placement is an
-    * ATOMIC overwrite rename (FileContext + Rename.OVERWRITE): there is no
+    * ATOMIC overwrite rename (`IngestWriter.renameOver`): there is no
     * delete-then-rename window during which `committedDf` would see no
     * manifest for a replayed batch. */
   private[ingest] def writeStats(stats: DataFrame,
@@ -409,15 +393,17 @@ object CommitManifest {
       else stats.withColumn("col_stats",
         lit(null).cast("array<struct<c: string, lo: double, hi: double, " +
           "slo: string, shi: string>>"))
-    val ordered = withStats.orderBy(col("object_key"))
-    // to_json drops null fields, so stat-less lakes keep the original
-    // four-field line format
-    val jsonLines = ordered.select(to_json(struct(
-      col("object_key"), col("start_offset"), col("end_offset"),
-      col("record_count"), col("col_stats"))).as("value"))
+    // one part file, sorted inside its single task (a global orderBy
+    // would add a range-partitioning sample job); to_json drops null
+    // fields, so stat-less lakes keep the original four-field line format
+    val jsonLines = withStats.coalesce(1)
+      .sortWithinPartitions(col("object_key"))
+      .select(to_json(struct(
+        col("object_key"), col("start_offset"), col("end_offset"),
+        col("record_count"), col("col_stats"))).as("value"))
     val manifestDir = s"$topicDir/_graft_manifest"
     val tmp = s"$manifestDir/_tmp"
-    jsonLines.coalesce(1).write.mode("overwrite").text(tmp)
+    jsonLines.write.mode("overwrite").text(tmp)
     val conf = spark.sparkContext.hadoopConfiguration
     val tmpPath = new org.apache.hadoop.fs.Path(tmp)
     val fs = tmpPath.getFileSystem(conf)
@@ -438,9 +424,7 @@ object CommitManifest {
     val keyHash = java.lang.Long.toHexString(row.getLong(2))
     val dest = new org.apache.hadoop.fs.Path(
       s"$manifestDir/commit-${row.getLong(0)}-${row.getLong(1)}-$keyHash.json")
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(dest.toUri, conf)
-    fc.rename(part.head.getPath, dest,
-      org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+    IngestWriter.renameOver(fs, part.head.getPath, dest)
     fs.delete(tmpPath, true)
     dest.toString
   }

@@ -1,25 +1,41 @@
 package graft.ingest
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
+import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptContext, TaskAttemptID, TaskID, TaskType}
+import org.apache.hadoop.mapred.JobConf
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.datasources.{OutputWriter, OutputWriterFactory}
+import org.apache.spark.sql.execution.datasources.json.JsonFileFormat
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DecimalType, StructType}
+import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
+
+import scala.jdk.CollectionConverters._
 
 /** The sink pipeline (SURVEY §3.1 mapped to Spark): derive the encoded
   * partition → assign deterministic file groups (rotation §2.5) → write one
-  * object per group under the reference's layout contract:
+  * object per group and view under the reference's layout contract:
   *
   *   `<out>/<topics.dir>/<topic>/<encodedPartition>/<topic>+<kafkaPartition>+<paddedStartOffset>.<ext>`
   *
   * (TopicPartitionWriter.java:868-883.)
   *
-  * Execution shape (scale-audited): ONE hash shuffle on
-  * `(kafkaPartition, encodedPartition, extraGroups)` feeds both window
-  * functions (row_number + min-offset share partitioning) and the write —
-  * each file group lives wholly inside one task, so the dynamic-partition
-  * write emits exactly one part file per `(encodedPartition, fileName)` dir
-  * with no second exchange. The commit is a per-file rename, the same cost
-  * class as Hadoop's FileOutputCommitter v1 / S3A committers. Deterministic
-  * names make replay idempotent (X1).
+  * Execution shape: ONE hash exchange on the group key, with the session's
+  * parallelism as an explicit partition count that adaptive execution may
+  * not coalesce, feeds both rotation windows and the write; each file group
+  * lives wholly inside one task, contiguous and in offset order. ONE
+  * `mapPartitions` pass then writes every view of every group the task owns
+  * (value, `.keys`, `.headers`, KeyValueHeaderRecordWriterProvider.java
+  * :63-144), each object under a temp name unique to the task attempt,
+  * renamed onto its final key when the group closes: the commit happens in
+  * the task, with no staging dir and no promote job. Deterministic names
+  * make replay idempotent (X1).
   */
 object IngestWriter {
 
@@ -27,7 +43,14 @@ object IngestWriter {
                             path: String)
 
   private val EpartCol = "__epart"
-  private val FnameCol = "__fname"
+  private val KeyCol = "__gkey"
+  private val BaseCol = "__fbase"
+  private val TempName = """\.(.+)\.[0-9a-f-]{36}\.tmp""".r
+
+  /** One stored view of a file group: the object-name suffix, the config
+    * whose format/compression encode it, and the columns it stores. */
+  private[ingest] final case class View(ext: String, cfg: IngestConfig,
+                                        cols: Seq[Column])
 
   /** Write `df` (must carry `kafkaPartition` and `offset` columns) as the
     * reference layout. `payloadCols` are the columns stored inside each file.
@@ -36,184 +59,233 @@ object IngestWriter {
             outDir: String,
             kafkaPartition: Column, offset: Column,
             payloadCols: Seq[Column],
-            extraFileGroups: Seq[Column] = Nil,
-            extSuffix: String = ""): Seq[FileInfo] = {
-    val spark = df.sparkSession
-    val ext = extSuffix + cfg.extension
-
-    val groupKey = Seq(kafkaPartition, encodedPartition) ++ extraFileGroups
-    val grouped = Rotation.assignSizeFiles(
-      df.withColumn(EpartCol, encodedPartition),
-      struct(groupKey: _*), offset, cfg.flushSize)
-
-    val named = grouped.withColumn(
-      FnameCol,
-      FileNaming.fileName(lit(cfg.topic), kafkaPartition,
-        col(Rotation.StartOffsetCol), ext, cfg.padWidth))
-
-    // W4 raw bytes stream task-side to the final keys (true binary
-    // payloads + configurable separator; no staging rename).
-    if (cfg.format == OutputFormat.ByteArray) {
-      require(payloadCols.length == 1,
-        "ByteArray format serializes exactly one value column")
-      val data = named.select(payloadCols.head.as("__value"),
-        col(EpartCol), col(FnameCol), offset.as("__offset"))
-      return RawGroupWriter.write(data, EpartCol, FnameCol, "__offset",
-        "__value", s"$outDir/${cfg.topicsDir}/${cfg.topic}",
-        cfg.compression, cfg.byteArraySeparator)
-    }
-
-    // Avro has no native DataFrameWriter in this environment — its groups
-    // stream through AvroGroupWriter directly to the final object keys.
-    if (cfg.format == OutputFormat.Avro) {
-      val data = named.select(
-        (payloadCols :+ col(EpartCol) :+ col(FnameCol) :+
-          offset.as("__offset")): _*)
-      val payloadSchema = org.apache.spark.sql.types.StructType(
-        data.schema.fields.filterNot(f =>
-          Set(EpartCol, FnameCol, "__offset").contains(f.name)))
-      return AvroGroupWriter.write(data, EpartCol, FnameCol, "__offset",
-        payloadSchema, s"$outDir/${cfg.topicsDir}/${cfg.topic}",
-        cfg.compression)
-    }
-
-    val staging = s"$outDir/_staging_${cfg.topic}${extSuffix.replace(".", "_")}"
-    val selected = named
-      .select((payloadCols :+ col(EpartCol) :+ col(FnameCol)): _*)
-    // json.decimal.format=BASE64: decimals serialize as base64 of the
-    // unscaled value — project through binary (Spark's JSON writer emits
-    // binary as base64); NUMERIC leaves the decimal as a plain number.
-    val jsonReady =
-      if (cfg.format == OutputFormat.Json &&
-        cfg.jsonDecimalFormat == JsonDecimalFormat.Base64)
-        selected.schema.fields
-          .filter(_.dataType.isInstanceOf[org.apache.spark.sql.types.DecimalType])
-          .foldLeft(selected) { (acc, f) =>
-            acc.withColumn(f.name,
-              graft.functions.FormatExpressions.decimalUnscaledBytes(col(f.name)))
-          }
-      else selected
-    val writer = jsonReady
-      .write.mode("overwrite")
-      .partitionBy(EpartCol, FnameCol)
-      .format(cfg.format.sparkFormat)
-    val withCompression = cfg.format match {
-      case OutputFormat.Json | OutputFormat.ByteArray =>
-        cfg.compression.fold(writer)(c => writer.option("compression", c))
-      case OutputFormat.Parquet | OutputFormat.Avro =>
-        cfg.compression.fold(writer)(c => writer.option("compression", c))
-    }
-    withCompression.save(staging)
-
-    promote(spark, staging, s"$outDir/${cfg.topicsDir}/${cfg.topic}")
-  }
+            extraFileGroups: Seq[Column] = Nil): Seq[FileInfo] =
+    writeKVH(df, cfg.copy(writeKeys = false, writeHeaders = false),
+      encodedPartition, outDir, kafkaPartition, offset, payloadCols,
+      extraFileGroups)
 
   /** P4 K/V/H composite write
     * (format/KeyValueHeaderRecordWriterProvider.java:63-144): value, `.keys`
     * and `.headers` files share the same basename per file group; key
     * non-null is enforced when keys are written (Utils.java:31-40 name
     * contract). Each sidecar view is written in its OWN configured format
-    * (`keys.format.class` / `headers.format.class`, default Avro) — the
-    * view's file group assignment is identical to the value view's (same
-    * group key, same flush.size), so lockstep holds across formats. */
+    * (`keys.format.class` / `headers.format.class`, default Avro) — all
+    * views come out of the same group assignment and the same pass, so
+    * lockstep holds across formats. */
   def writeKVH(df: DataFrame, cfg: IngestConfig, encodedPartition: Column,
                outDir: String, kafkaPartition: Column, offset: Column,
                valueCols: Seq[Column],
-               extraFileGroups: Seq[Column] = Nil): Seq[FileInfo] = {
-    // extraFileGroups (e.g. R2 time-rotation buckets) must thread through
-    // all three views so .keys/.headers stay in lockstep with the value
-    // files AND agree with the CommitManifest grouping
-    val value = write(df, cfg, encodedPartition, outDir, kafkaPartition,
-      offset, valueCols, extraFileGroups = extraFileGroups)
-    val keys =
-      if (!cfg.writeKeys) Nil
-      else write(
-        df.withColumn("key", when(col("key").isNull,
-            raise_error(lit("store.kafka.keys requires non-null keys")))
-          .otherwise(col("key"))),
-        cfg.copy(format = cfg.keyFormat), encodedPartition, outDir,
-        kafkaPartition, offset,
-        Seq(struct(col("key")).as("RecordKey")),
-        extraFileGroups = extraFileGroups, extSuffix = ".keys")
-    val headers =
-      if (!cfg.writeHeaders) Nil
-      else write(df, cfg.copy(format = cfg.headerFormat), encodedPartition,
-        outDir, kafkaPartition, offset,
-        // P3 applies INSIDE the writer (RecordViews.java:106-110): values
-        // stringify — so the verbatim Kafka-source binary header values
-        // land as strings, and an already-string frame is unchanged
-        Seq(RecordViews.stringifiedHeaders(col("headers")).as("headers")),
-        extraFileGroups = extraFileGroups,
-        extSuffix = ".headers")
-    value ++ keys ++ headers
+               extraFileGroups: Seq[Column] = Nil): Seq[FileInfo] =
+    writeGroups(group(df, cfg, encodedPartition, kafkaPartition, offset,
+      extraFileGroups), cfg, outDir, kafkaPartition, offset,
+      views(cfg, valueCols))
+
+  /** The views `cfg` stores: the value, plus `.keys` and `.headers` when
+    * `store.kafka.keys` / `store.kafka.headers` are on. */
+  private[ingest] def views(cfg: IngestConfig,
+                            valueCols: Seq[Column]): Seq[View] =
+    View(cfg.extension, cfg, valueCols) +:
+      (Option.when(cfg.writeKeys)(View(cfg.keyExtension,
+        cfg.copy(format = cfg.keyFormat), Seq(struct(when(col("key").isNull,
+          raise_error(lit("store.kafka.keys requires non-null keys")))
+          .otherwise(col("key")).as("key")).as("RecordKey")))) ++
+      // P3 applies INSIDE the writer (RecordViews.java:106-110): values
+      // stringify — so the verbatim Kafka-source binary header values land
+      // as strings, and an already-string frame is unchanged
+      Option.when(cfg.writeHeaders)(View(cfg.headerExtension,
+        cfg.copy(format = cfg.headerFormat),
+        Seq(RecordViews.stringifiedHeaders(col("headers")).as("headers"))))).toSeq
+
+  /** Assign every row its file group (adds `__epart` and the
+    * [[Rotation.assignSizeFiles]] columns): the group key — extra groups
+    * such as R2 time buckets split files within a partition — is hashed
+    * once into `defaultParallelism` partitions for windows and write. */
+  private[ingest] def group(df: DataFrame, cfg: IngestConfig,
+                            encodedPartition: Column, kafkaPartition: Column,
+                            offset: Column,
+                            extraFileGroups: Seq[Column]): DataFrame = {
+    val keyed = df.withColumn(EpartCol, encodedPartition)
+      .withColumn(KeyCol,
+        struct((Seq(kafkaPartition, col(EpartCol)) ++ extraFileGroups): _*))
+    Rotation.assignSizeFiles(
+      keyed.repartition(df.sparkSession.sparkContext.defaultParallelism,
+        col(KeyCol)),
+      col(KeyCol), offset, cfg.flushSize)
   }
 
-  /** Move staged `__epart=E/__fname=F/part-*` files to their contract names.
-    * Percent-decodes Spark's partition-path escaping (e.g. the `/` inside
-    * hourly paths arrives as `%2F` and must become real subdirectories).
-    *
-    * The commit itself is a Spark job: the driver lists only the
-    * encoded-partition directories (bounded by partition count) and tasks
-    * do the per-file listing + renames in parallel — at millions of objects
-    * per batch the driver never loops over files, it only collects the
-    * per-object FileInfo metadata. Rename results are asserted so a silent
-    * rename failure fails the commit instead of corrupting the manifest.
-    * Task retries are safe: a group whose part file is gone but whose dest
-    * exists was promoted by a prior attempt and is reported as-is. */
-  private def promote(spark: org.apache.spark.sql.SparkSession,
-                      stagingDir: String, topicDir: String): Seq[FileInfo] = {
-    val driverFs = FileSystem.get(new java.net.URI(stagingDir),
-      spark.sparkContext.hadoopConfiguration)
-    val staging = new Path(stagingDir)
-    if (!driverFs.exists(staging)) return Nil
-    val epartDirs = driverFs.listStatus(staging)
-      .filter(_.isDirectory).map(_.getPath.toString).toSeq
-    if (epartDirs.isEmpty) { driverFs.delete(staging, true); return Nil }
-    val hadoopConf = new org.apache.spark.util.SerializableConfiguration(
-      spark.sparkContext.hadoopConfiguration)
-    val parallelism =
-      math.min(epartDirs.length, spark.sparkContext.defaultParallelism)
-    val infos = spark.sparkContext.parallelize(epartDirs, parallelism)
-      .flatMap { dirStr =>
-        val dir = new Path(dirStr)
-        val fs = FileSystem.get(dir.toUri, hadoopConf.value)
-        val epart = unescape(dir.getName.stripPrefix(s"$EpartCol="))
-        fs.listStatus(dir).filter(_.isDirectory).map { fnameStatus =>
-          val fname =
-            unescape(fnameStatus.getPath.getName.stripPrefix(s"$FnameCol="))
-          val dest = new Path(s"$topicDir/$epart/$fname")
-          val parts = fs.listStatus(fnameStatus.getPath)
-            .filter(s => s.isFile && !s.getPath.getName.startsWith("_")
-              && !s.getPath.getName.startsWith("."))
-          if (parts.isEmpty && fs.exists(dest)) {
-            // already promoted by a previous attempt of this task
-            FileInfo(epart, fname, dest.toString)
-          } else {
-            require(parts.length == 1,
-              s"expected exactly 1 part file per group, got ${parts.length} in ${fnameStatus.getPath}")
-            fs.mkdirs(dest.getParent)
-            if (fs.exists(dest)) fs.delete(dest, false) // X1: idempotent replay
-            require(fs.rename(parts.head.getPath, dest),
-              s"rename to $dest failed")
-            FileInfo(epart, fname, dest.toString)
-          }
-        }
-      }.collect().toSeq
-    driverFs.delete(staging, true)
-    infos.sortBy(f => (f.encodedPartition, f.fileName))
+  /** The write pass over a [[group]]ed frame: every view of every file
+    * group, one task-side pass, committed at the final keys. Returns the
+    * objects, the value view's first, each view's by key. */
+  private[ingest] def writeGroups(grouped: DataFrame, cfg: IngestConfig,
+                                  outDir: String, kafkaPartition: Column,
+                                  offset: Column,
+                                  views: Seq[View]): Seq[FileInfo] = {
+    val spark = grouped.sparkSession
+    val arranged = grouped
+      .sortWithinPartitions(col(KeyCol), offset)
+      .select((col(EpartCol) +: FileNaming.fileName(lit(cfg.topic),
+          kafkaPartition, col(Rotation.StartOffsetCol), "", cfg.padWidth)
+          .as(BaseCol) +:
+        views.zipWithIndex.map { case (v, i) =>
+          viewStruct(grouped, v).as(s"__view$i") }): _*)
+    val schemas = views.indices.map(i =>
+      arranged.schema(i + 2).dataType.asInstanceOf[StructType])
+    val base = spark.sparkContext.hadoopConfiguration
+    val factories = views.zip(schemas).map { case (v, s) =>
+      factory(spark, base, v.cfg, s) }
+    val exts = views.map(_.ext)
+    val topicDir = s"$outDir/${cfg.topicsDir}/${cfg.topic}"
+    // one Hadoop conf per task; each view ships only what it adds to it
+    val conf = new SerializableConfiguration(base)
+    val infos = arranged.queryExecution.toRdd.mapPartitions { rows =>
+      new GroupPass(topicDir, exts, factories, schemas, conf.value).run(rows)
+    }.collect().toSeq
+    infos.sortBy { case (view, f) => (view, f.encodedPartition, f.fileName) }
+      .map(_._2)
   }
 
-  /** Inverse of Spark's `escapePathName` for the characters we can emit. */
-  private[graft] def unescape(s: String): String = {
-    val sb = new StringBuilder(s.length)
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '%' && i + 2 < s.length) {
-        sb.append(Integer.parseInt(s.substring(i + 1, i + 3), 16).toChar)
-        i += 3
-      } else { sb.append(c); i += 1 }
+  /** A view's columns as one struct, named as a `select` of them would
+    * name them (column metadata such as `avro.union` rides along).
+    * json.decimal.format=BASE64: decimals serialize as base64 of the
+    * unscaled value — projected through binary (Spark's JSON writer emits
+    * binary as base64); NUMERIC leaves the decimal as a plain number. */
+  private def viewStruct(df: DataFrame, v: View): Column = {
+    val base64 = v.cfg.format == OutputFormat.Json &&
+      v.cfg.jsonDecimalFormat == JsonDecimalFormat.Base64
+    struct(v.cols.zip(df.select(v.cols: _*).schema.fields).map {
+      case (c, f) if base64 && f.dataType.isInstanceOf[DecimalType] =>
+        graft.functions.FormatExpressions.decimalUnscaledBytes(c)
+          .as(f.name, f.metadata)
+      case (c, f) => c.as(f.name, f.metadata)
+    }: _*)
+  }
+
+  /** The encoder of one view, prepared on the driver: Spark's own
+    * Parquet/JSON writers (the ones `DataFrameWriter` uses, `compression`
+    * included), the Avro container encoding, or the W4 raw bytes. Also
+    * returns the settings its preparation added to `base`. */
+  private def factory(spark: org.apache.spark.sql.SparkSession,
+                      base: Configuration, cfg: IngestConfig,
+                      schema: StructType): (OutputWriterFactory,
+                                            Map[String, String]) = {
+    val job = Job.getInstance(base)
+    val options = cfg.compression.map("compression" -> _).toMap
+    val f = cfg.format match {
+      case OutputFormat.Parquet =>
+        new ParquetFileFormat().prepareWrite(spark, job, options, schema)
+      case OutputFormat.Json =>
+        new JsonFileFormat().prepareWrite(spark, job, options, schema)
+      case OutputFormat.Avro => AvroGroupWriter.factory(cfg.compression)
+      case OutputFormat.ByteArray =>
+        require(schema.length == 1,
+          "ByteArray format serializes exactly one value column")
+        RawGroupWriter.factory(cfg.compression, cfg.byteArraySeparator)
     }
-    sb.toString
+    (f, job.getConfiguration.iterator.asScala.collect {
+      case e if base.getRaw(e.getKey) != e.getValue => e.getKey -> e.getValue
+    }.toMap)
+  }
+
+  /** One task's write pass. Rows arrive as `(__epart, __fbase, view
+    * structs...)`, each file group contiguous and in offset order. */
+  private final class GroupPass(
+      topicDir: String, exts: Seq[String],
+      factories: Seq[(OutputWriterFactory, Map[String, String])],
+      schemas: Seq[StructType], conf: Configuration) {
+    private val fs = new Path(topicDir).getFileSystem(conf)
+    private val tag = java.util.UUID.randomUUID().toString
+    private val contexts = factories.map { case (_, settings) =>
+      val c = new JobConf(conf)
+      settings.foreach { case (k, v) => c.set(k, v) }
+      val tc = TaskContext.get()
+      new TaskAttemptContextImpl(c, new TaskAttemptID(new TaskID(
+        new JobID("graft", tc.stageId()), TaskType.MAP, tc.partitionId()),
+        tc.attemptNumber()))
+    }
+    private val out =
+      scala.collection.mutable.ArrayBuffer.empty[(Int, FileInfo)]
+    private val committed = scala.collection.mutable.Set.empty[Path]
+    private var epart: String = _
+    private var open: Array[(OutputWriter, Path, Path)] = Array.empty
+
+    def run(rows: Iterator[InternalRow]): Iterator[(Int, FileInfo)] = {
+      var curEpart: UTF8String = null
+      var curBase: UTF8String = null
+      try {
+        while (rows.hasNext) {
+          val r = rows.next()
+          if (curEpart == null || r.getUTF8String(0) != curEpart ||
+            r.getUTF8String(1) != curBase) {
+            commit()
+            curEpart = r.getUTF8String(0).clone()
+            curBase = r.getUTF8String(1).clone()
+            openGroup(curEpart.toString, curBase.toString)
+          }
+          open.indices.foreach(i =>
+            open(i)._1.write(r.getStruct(i + 2, schemas(i).length)))
+        }
+        commit()
+        sweep()
+      } catch {
+        case t: Throwable => abort(); throw t
+      }
+      out.iterator
+    }
+
+    private def openGroup(e: String, base: String): Unit = {
+      epart = e
+      open = exts.indices.map { i =>
+        val dest = new Path(s"$topicDir/$epart/$base${exts(i)}")
+        val tmp = new Path(dest.getParent, s".${dest.getName}.$tag.tmp")
+        (factories(i)._1.newInstance(tmp.toString, schemas(i), contexts(i)),
+          tmp, dest)
+      }.toArray
+    }
+
+    /** Close the open group and rename each view into place (atomic
+      * overwrite: a replay or a stale object is replaced, never doubled). */
+    private def commit(): Unit = {
+      open.foreach(_._1.close())
+      open.zipWithIndex.foreach { case ((_, tmp, dest), i) =>
+        renameOver(fs, tmp, dest)
+        committed += dest
+        out += (i -> FileInfo(epart, dest.getName, dest.toString))
+      }
+      open = Array.empty
+    }
+
+    /** Delete temps that dead attempts left beside the committed keys. */
+    private def sweep(): Unit = committed.map(_.getParent).foreach { dir =>
+      fs.listStatus(dir).map(_.getPath).foreach { p =>
+        p.getName match {
+          case TempName(name) if committed(new Path(dir, name)) =>
+            fs.delete(p, false)
+          case _ =>
+        }
+      }
+    }
+
+    private def abort(): Unit = open.foreach { case (w, tmp, _) =>
+      try w.close() catch { case _: Throwable => }
+      try fs.delete(tmp, false) catch { case _: Throwable => }
+    }
+  }
+
+  /** Move `src` onto `dst`: a plain rename when `dst` is new, an atomic
+    * FileContext `Rename.OVERWRITE` when the store refuses to rename onto
+    * an existing object (HDFS and the local file system do). */
+  private[ingest] def renameOver(fs: FileSystem, src: Path, dst: Path): Unit =
+    if (!fs.rename(src, dst))
+      FileContext.getFileContext(fs.getUri, fs.getConf)
+        .rename(src, dst, Options.Rename.OVERWRITE)
+
+  /** The base of the Avro and raw-bytes view encoders. */
+  private[ingest] abstract class StreamWriterFactory extends OutputWriterFactory {
+    def getFileExtension(context: TaskAttemptContext): String = ""
+    protected def create(path: String,
+                         context: TaskAttemptContext): java.io.OutputStream = {
+      val p = new Path(path)
+      p.getFileSystem(context.getConfiguration).create(p, false)
+    }
   }
 }

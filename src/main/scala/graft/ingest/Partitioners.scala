@@ -41,11 +41,6 @@ object Partitioners {
   def dailyPartition(ts: Column): Column =
     date_format(ts, "'year'=yyyy/'month'=MM/'day'=dd")
 
-  /** K5 generalized `partition.duration.ms` bucketing of the extracted
-    * timestamp (TopicPartitionWriterTest.java:389-392). */
-  def timeBucket(ts: Column, durationMs: Long): Column =
-    floor(unix_millis(ts) / durationMs)
-
   /** K5 fully-configurable TimeBasedPartitioner: the reference's
     * `path.format` (Joda pattern, e.g. `'year'=YYYY/'month'=MM/'day'=dd`)
     * and `timezone` keys (S3SinkConnectorConfig PARTITIONER group;

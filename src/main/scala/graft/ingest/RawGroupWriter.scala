@@ -1,67 +1,44 @@
 package graft.ingest
 
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
+import org.apache.hadoop.mapreduce.TaskAttemptContext
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.execution.datasources.{OutputWriter, OutputWriterFactory}
+import org.apache.spark.sql.types.StructType
 
-/** W4 raw-bytes writer
+/** W4 raw-bytes encoder
   * (format/bytearray/ByteArrayRecordWriterProvider.java:38-92): each record's
   * value bytes followed by the configured line separator
-  * (`format.bytearray.separator`, default `\n`), streamed task-side straight
-  * to the final object key — the same direct-path pattern as
-  * AvroGroupWriter, so ByteArray needs no staging rename either. True
-  * binary payloads round-trip byte-exact; string payloads write their UTF-8
-  * bytes (what the reference's ByteArrayConverter passes through). */
+  * (`format.bytearray.separator`, default `\n`), streamed inside the write
+  * pass of [[IngestWriter]] like the Avro encoder. True binary payloads
+  * round-trip byte-exact; string payloads write their UTF-8 bytes (what the
+  * reference's ByteArrayConverter passes through). */
 object RawGroupWriter {
 
-  def write(df: DataFrame, epartCol: String, fnameCol: String,
-            orderCol: String, valueCol: String, topicDir: String,
-            compression: Option[String],
-            separator: String): Seq[IngestWriter.FileInfo] = {
-    val hadoopConf = new org.apache.spark.util.SerializableConfiguration(
-      df.sparkSession.sparkContext.hadoopConfiguration)
-    val sepBytes = separator.getBytes("UTF-8")
-    val gzip = compression.contains("gzip")
-
-    val arranged = df
-      .repartition(col(epartCol), col(fnameCol))
-      .sortWithinPartitions(col(epartCol), col(fnameCol), col(orderCol))
-
-    val infos = arranged.toDF().rdd.mapPartitions { rows =>
-      val fs = FileSystem.get(new java.net.URI(topicDir), hadoopConf.value)
-      var currentKey: (String, String) = null
-      var out: java.io.OutputStream = null
-      val written =
-        scala.collection.mutable.ArrayBuffer.empty[IngestWriter.FileInfo]
-      def close(): Unit = if (out != null) { out.close(); out = null }
-      val result = rows.flatMap { row =>
-        val epart = row.getAs[String](epartCol)
-        val fname = row.getAs[String](fnameCol)
-        if ((epart, fname) != currentKey) {
-          close()
-          currentKey = (epart, fname)
-          val dest = new Path(s"$topicDir/$epart/$fname")
-          fs.mkdirs(dest.getParent)
-          val raw = fs.create(dest, true) // X1: idempotent overwrite
-          out = if (gzip) new java.util.zip.GZIPOutputStream(raw) else raw
-          written += IngestWriter.FileInfo(epart, fname, dest.toString)
+  def factory(compression: Option[String],
+              separator: String): OutputWriterFactory =
+    new IngestWriter.StreamWriterFactory {
+      def newInstance(file: String, payload: StructType,
+                      context: TaskAttemptContext): OutputWriter = {
+        val sepBytes = separator.getBytes("UTF-8")
+        val toRow = CatalystTypeConverters.createToScalaConverter(payload)
+        val raw = create(file, context)
+        val out =
+          if (compression.contains("gzip")) new java.util.zip.GZIPOutputStream(raw)
+          else raw
+        new OutputWriter {
+          def write(row: InternalRow): Unit = {
+            out.write(toRow(row).asInstanceOf[Row].get(0) match {
+              case b: Array[Byte] => b
+              case s: String => s.getBytes("UTF-8")
+              case null => Array.empty[Byte]
+              case other => other.toString.getBytes("UTF-8")
+            })
+            out.write(sepBytes)
+          }
+          def close(): Unit = out.close()
+          def path(): String = file
         }
-        val bytes = row.get(row.fieldIndex(valueCol)) match {
-          case b: Array[Byte] => b
-          case s: String => s.getBytes("UTF-8")
-          case null => Array.empty[Byte]
-          case other => other.toString.getBytes("UTF-8")
-        }
-        out.write(bytes)
-        out.write(sepBytes)
-        Iterator.empty[IngestWriter.FileInfo]
-      } ++ {
-        close()
-        written.iterator
       }
-      result
-    }.collect().toSeq
-
-    infos.sortBy(f => (f.encodedPartition, f.fileName))
-  }
+    }
 }

@@ -23,17 +23,20 @@ object Rotation {
     * each file's name derives from its min offset (X1). Adds
     * `_file_index` and `_file_start_offset`.
     *
-    * Scale note: the window shuffles once by `partitionCol` and both window
-    * functions share that single shuffle (same partitioning + ordering).
+    * Scale note: both windows share one partitioning and ordering, so they
+    * cost one shuffle and one sort, and each file's rows come out
+    * contiguous and in offset order (its first row's offset carried
+    * forward as the start offset).
     */
   def assignSizeFiles(df: DataFrame, partitionCol: Column, offsetCol: Column,
                       flushSize: Int): DataFrame = {
     require(flushSize > 0, "flush.size must be positive")
     val w = Window.partitionBy(partitionCol).orderBy(offsetCol)
-    val withIdx =
-      df.withColumn(FileIndexCol, floor((row_number().over(w) - 1) / flushSize))
-    val wf = Window.partitionBy(partitionCol, col(FileIndexCol))
-    withIdx.withColumn(StartOffsetCol, min(offsetCol).over(wf))
+    df.withColumn(FileIndexCol, row_number().over(w) - 1)
+      .withColumn(StartOffsetCol, last(when(col(FileIndexCol) % flushSize === 0,
+        offsetCol), ignoreNulls = true).over(
+        w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+      .withColumn(FileIndexCol, floor(col(FileIndexCol) / flushSize))
   }
 
   val EraCol = "_commit_era"
@@ -167,10 +170,6 @@ object Rotation {
     val sinceDayStart = nowMs - dayStart
     dayStart + ((sinceDayStart / intervalMs) + 1) * intervalMs
   }
-
-  /** R5 schema-change rotation: group by schema version so each file holds a
-    * single schema (TopicPartitionWriter.java:471-488). */
-  def schemaFileGroup(schemaVersion: Column): Column = schemaVersion
 
   /** R6 tombstone/non-tombstone transition rotation: null-value rows never
     * share a file with data rows (TopicPartitionWriter.java:380-403). */

@@ -247,18 +247,19 @@ object PipelineQueries {
     // Connect union shape, DataWriterAvroTest.java:174,784-794): every
     // event carries a 3-branch union column — string (event_type) /
     // long (cents) / record {x} by event_id mod 3, null optional at
-    // %97 — written as REAL Avro container files via AvroGroupWriter
-    // (the struct-of-nullables field marked `avro.union` becomes a TRUE
+    // %97 — written as REAL Avro container files by the sink's write
+    // pass with the AvroGroupWriter encoder (the struct-of-nullables field marked `avro.union` becomes a TRUE
     // Avro union in the file schema), then read back through the
     // executor-side FileSystem decode and emitted relationally. The
     // oracle recomputes every branch from the raw events table, so a
     // hash match certifies branch selection, values, and the null
     // optional all survive the round trip — not just the schema shape.
-    // Scale: write and read are file-grained map-only passes; the 4
-    // deterministic file groups keep bench reps idempotent (X1
-    // overwrite).
+    // Scale: the write is the sink's one-exchange pass, the read a
+    // file-grained map-only pass; the 4 deterministic file groups keep
+    // bench reps idempotent (X1 overwrite).
     "ingest_avro_union" -> ((s, d) => {
-      import graft.ingest.AvroGroupWriter
+      import graft.ingest.{AvroGroupWriter, IngestConfig, IngestWriter,
+        OutputFormat}
       val unionMeta = new MetadataBuilder()
         .putBoolean("avro.union", true).build()
       val innerT = StructType(Seq(StructField("x", LongType)))
@@ -285,11 +286,12 @@ object PipelineQueries {
               struct(nullS, col("cents").as("n"), nullR))
             .otherwise(struct(nullS, nullN,
               struct((col("event_id") * 2).as("x")).as("rec"))).as("u"))
-        .withColumn("epart", concat(lit("g="), pmod(col("offset"), lit(4))))
-        .withColumn("fname", concat(lit("u+"), pmod(col("offset"), lit(4)),
-          lit("+0000000000.avro")))
-      val files = AvroGroupWriter.write(src, "epart", "fname", "offset",
-        payload, dir, codec = None)
+        .withColumn("g", pmod(col("offset"), lit(4)))
+      val files = IngestWriter.write(src,
+        IngestConfig(topic = "u", format = OutputFormat.Avro,
+          flushSize = Int.MaxValue),
+        concat(lit("g="), col("g")), dir, col("g"), col("offset"),
+        payloadCols = Seq(col("offset"), col("u").as("u", unionMeta)))
       AvroGroupWriter.read(s, files.map(_.path), payload)
         .select(col("offset").as("event_id"),
           when(col("u").isNull, lit("null"))

@@ -1,7 +1,7 @@
 package graft
 
 import graft.functions.CorpusMinHash
-import graft.ingest.{IngestWriter, Rotation, SchemaCompat}
+import graft.ingest.{Rotation, SchemaCompat}
 import org.scalacheck.{Gen, Prop, Properties}
 import org.scalacheck.Prop.forAll
 
@@ -9,15 +9,6 @@ import org.scalacheck.Prop.forAll
   * invariants). Pure-JVM ScalaCheck at full volume; Spark expression
   * equivalence is batch-checked in SparkPropertySpec. */
 object EngineProperties extends Properties("graft") {
-
-  property("unescape inverts Spark's partition-path escaping") = {
-    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-    val strGen = Gen.listOf(Gen.oneOf(Gen.alphaNumChar,
-      Gen.oneOf('/', '%', '=', ':', ' ', 'é', '中'))).map(_.mkString)
-    forAll(strGen) { s =>
-      IngestWriter.unescape(ExternalCatalogUtils.escapePathName(s)) == s
-    }
-  }
 
   property("scheduled rotation fires interval-aligned from local day start," +
     " strictly in the future, within one interval") = {

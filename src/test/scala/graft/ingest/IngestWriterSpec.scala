@@ -390,4 +390,113 @@ class IngestWriterSpec extends SparkSuite {
     assert(files.map(_.fileName) ==
       Seq("t+0+0000000000.parquet", "t+0+0000000002.parquet"))
   }
+
+  /** `n` records on Kafka partition 0 with keys, values and one header. */
+  private def kvhFrame(n: Long) =
+    (0L until n).map(o => (0, o, s"k$o", s"v$o", Seq((s"h$o", s"hv$o"))))
+      .toDF("kafka_partition", "offset", "key", "value", "headers")
+      .withColumn("headers", transform(col("headers"), e =>
+        struct(e.getField("_1").as("key"), e.getField("_2").as("value"))))
+
+  /** Every regular file under `dir` (checksum files aside), relative. */
+  private def listing(dir: String): Seq[String] = {
+    val root = java.nio.file.Paths.get(dir)
+    val walk = Files.walk(root)
+    try {
+      import scala.jdk.CollectionConverters._
+      walk.iterator().asScala.filter(Files.isRegularFile(_))
+        .map(p => root.relativize(p).toString)
+        .filterNot(_.endsWith(".crc")).toSeq.sorted
+    } finally walk.close()
+  }
+
+  test("one pass: Ingest.run with .keys and .headers and no manifest " +
+    "evaluates each input row exactly once") {
+    val out = freshDir()
+    val evals = spark.sparkContext.longAccumulator("ingest_row_evals")
+    val touch = udf { (o: Long) => evals.add(1L); o }.asNondeterministic()
+    val df = kvhFrame(20L).withColumn("offset", touch(col("offset")))
+    val cfg = IngestConfig(topic = "op", flushSize = 4,
+      writeKeys = true, writeHeaders = true)
+    val res = Ingest.run(df, cfg, PartitionerSpec.Default, out,
+      payloadCols = Seq(col("offset"), col("value")))
+    assert(res.files.size == 15) // 5 groups x (value, keys, headers)
+    assert(evals.value == 20L,
+      s"${evals.value} row evaluations for 20 rows: some view re-read the input")
+  }
+
+  test("crash residue: a dead attempt's temp object and a stale final " +
+    "object are replaced by exactly the keys and contents of a clean write") {
+    val cfg = IngestConfig(topic = "cr", flushSize = 4, writeKeys = true)
+    def go(out: String) = IngestWriter.writeKVH(kvhFrame(9L), cfg,
+      Partitioners.defaultPartition(col("kafka_partition")), out,
+      col("kafka_partition"), col("offset"),
+      valueCols = Seq(col("offset"), col("value")))
+    val clean = freshDir()
+    go(clean)
+    val dirty = freshDir()
+    val part = java.nio.file.Paths.get(dirty, "topics", "cr", "partition=0")
+    Files.createDirectories(part)
+    // a temp that a crashed attempt left beside a key, and a final object
+    // holding another batch's bytes
+    Files.write(part.resolve(
+      s".cr+0+0000000000.parquet.${java.util.UUID.randomUUID()}.tmp"),
+      "partial".getBytes)
+    Files.write(part.resolve("cr+0+0000000004.keys.avro"), "stale".getBytes)
+    val files = go(dirty)
+    assert(listing(dirty) == listing(clean))
+    assert(!listing(dirty).exists(_.endsWith(".tmp")))
+    val keyFiles = files.filter(_.fileName.contains(".keys."))
+    assert(keyFiles.map(_.fileName) == Seq("cr+0+0000000000.keys.avro",
+      "cr+0+0000000004.keys.avro", "cr+0+0000000008.keys.avro"))
+    val payload = org.apache.spark.sql.types.StructType.fromDDL(
+      "RecordKey STRUCT<key: STRING>")
+    def keysOf(dir: String) = AvroGroupWriter.read(spark,
+        keyFiles.map(f => s"$dir/topics/cr/partition=0/${f.fileName}"),
+        payload)
+      .select(input_file_name().as("f"), col("RecordKey.key"))
+      .as[(String, String)].collect()
+      .map { case (f, k) => (f.split('/').last, k) }.sorted.toSeq
+    assert(keysOf(dirty) == keysOf(clean))
+    def valuesOf(dir: String) =
+      spark.read.parquet(s"$dir/topics/cr/partition=0/*.parquet")
+        .select(input_file_name().as("f"), col("offset"), col("value"))
+        .as[(String, Long, String)].collect()
+        .map { case (f, o, v) => (f.split('/').last, o, v) }.sorted.toSeq
+    assert(valuesOf(dirty) == valuesOf(clean))
+  }
+
+  test("P4 K/V/H lockstep across every encoder: JSON+gzip values with " +
+    "ByteArray keys and Parquet headers, one pass") {
+    val out = freshDir()
+    val cfg = IngestConfig(topic = "mx", format = OutputFormat.Json,
+      compression = Some("gzip"), flushSize = 3, writeKeys = true,
+      writeHeaders = true, keyFormat = OutputFormat.ByteArray,
+      headerFormat = OutputFormat.Parquet)
+    val files = IngestWriter.writeKVH(kvhFrame(7L), cfg,
+      Partitioners.defaultPartition(col("kafka_partition")), out,
+      col("kafka_partition"), col("offset"),
+      valueCols = Seq(col("offset"), col("value")))
+    val bases = Seq("mx+0+0000000000", "mx+0+0000000003", "mx+0+0000000006")
+    assert(files.map(_.fileName) == bases.map(_ + ".json.gz") ++
+      bases.map(_ + ".keys.bin.gz") ++ bases.map(_ + ".headers.gzip.parquet"))
+    def gunzipLines(path: String): Seq[String] = {
+      val in = new java.util.zip.GZIPInputStream(
+        new java.io.FileInputStream(path))
+      try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toVector
+      finally in.close()
+    }
+    val dir = s"$out/topics/mx/partition=0"
+    val groups = Seq(0L until 3L, 3L until 6L, 6L until 7L)
+    bases.zip(groups).foreach { case (b, offs) =>
+      assert(gunzipLines(s"$dir/$b.json.gz") ==
+        offs.map(o => s"""{"offset":$o,"value":"v$o"}"""))
+      // a struct view stores its row's text form, one line per record
+      assert(gunzipLines(s"$dir/$b.keys.bin.gz") == offs.map(o => s"[k$o]"))
+      val headers = spark.read.parquet(s"$dir/$b.headers.gzip.parquet")
+        .select(col("headers")(0)("key"), col("headers")(0)("value"))
+        .as[(String, String)].collect().toSeq
+      assert(headers.sorted == offs.map(o => (s"h$o", s"hv$o")))
+    }
+  }
 }
