@@ -796,12 +796,14 @@ object Bench {
     java.nio.file.Files.write(
       java.nio.file.Paths.get("BENCH_FULL.json").toAbsolutePath,
       (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    // lists in the compact line are CAPPED at 10 names (full lists live in
-    // BENCH_FULL.json) so a catastrophic run can't push the line back past
-    // the capture window and blind the driver exactly when it matters
+    // lists in the compact line are CAPPED at 5 names (full lists live in
+    // BENCH_FULL.json) so a catastrophic run can't push the line past the
+    // ~2000-char window its parser captures, exactly when it matters: at
+    // 10 names the saturated line reached about 1.9 KB
+    val cap = 5
     def capped(xs: Seq[String]): String =
-      (xs.take(10).map("\"" + _ + "\"") ++
-        (if (xs.size > 10) Seq("\"+" + (xs.size - 10) + " more\"")
+      (xs.take(cap).map("\"" + _ + "\"") ++
+        (if (xs.size > cap) Seq("\"+" + (xs.size - cap) + " more\"")
          else Nil)).mkString("[", ",", "]")
     val compact =
       f"""{"metric":"total","value":${total(results)}%.3f,"unit":"sec","reps":$reps,"n_queries":${benchedNames.size},"n_registered":$nRegistered,"unbenched":${capped(unbenched)},"queries":${json(results)},"value_r7":${total(r7)}%.3f,"value_r9":${total(r9)}%.3f,"value_r10":${total(r10)}%.3f,"value_r11":${total(r11)}%.3f,"value_r12":${total(r12)}%.3f,"value_r13":${total(r13)}%.3f,"value_r14":${total(r14)}%.3f,"value_r15":${total(r15)}%.3f,"value_r16":${total(r16)}%.3f,"value_sweep":${sweep.map(r => minOf(r._2)).filter(_ >= 0).sum}%.3f,"n_sweep":${sweep.size},"window_factor":$windowFactor%.3f,"group_breach_confirmed_adj":${capped(groupBreachConfirmedAdj)},"full_artifact":"BENCH_FULL.json","failed":${capped(failed.toSeq)},"sf":"$sfDir"}"""

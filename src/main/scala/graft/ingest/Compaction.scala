@@ -19,8 +19,9 @@ import org.apache.spark.sql.functions._
   * Execution shape: one distributed read (path-parsed partition/file
   * columns, no driver loop over records), one `dropDuplicates` shuffle on
   * the record identity `(kafkaPartition, encodedPartition, offset)`, then
-  * the standard `IngestWriter.write` single-shuffle group/name/write. The
-  * swap is write-then-delete: the new generation lands first (same-named
+  * the standard `IngestWriter` single-shuffle group/name/write pass, which
+  * also tallies the new objects' manifest tags. The swap is
+  * write-then-delete: the new generation lands first (same-named
   * objects overwrite idempotently), stale objects are deleted after, and a
   * crash anywhere in between replays to the identical converged state —
   * the identity dedup makes a mixed-generation read re-derive the same new
@@ -197,9 +198,19 @@ object Compaction {
     val records = lake
       .dropDuplicates("__kpart", "__epart", offsetCol)
 
-    val files = IngestWriter.write(records, cfg.copy(flushSize = targetRecords),
-      col("__epart"), outDir, col("__kpart"), col(offsetCol),
-      payloadCols = payload.toSeq, extraFileGroups = timeGroups)
+    // a W10 manifest vouches for object names compaction is about to
+    // rename: the write pass tallies the NEW objects' tags (stats columns
+    // included — dropping them would permanently strip data-skipping
+    // stats on first compact)
+    val oldManifests = CommitManifest.manifestFiles(spark, topicDir)
+    val wcfg = cfg.copy(flushSize = targetRecords, writeKeys = false,
+      writeHeaders = false)
+    val (files, tags) = IngestWriter.writeGroups(
+      IngestWriter.group(records, wcfg, col("__epart"), col("__kpart"),
+        col(offsetCol), timeGroups),
+      wcfg, outDir, col("__kpart"), col(offsetCol),
+      IngestWriter.views(wcfg, payload.toSeq),
+      tagged = oldManifests.nonEmpty)
 
     // stale = listed-before minus new-generation names: a distributed
     // anti-join against the (small, broadcast) new file set — the stale
@@ -210,38 +221,19 @@ object Compaction {
     val stale = before.join(broadcast(newDf), Seq("__epart", "__fname"),
       "left_anti").persist()
     val staleCount = stale.count()
-    // a W10 manifest vouches for object names compaction just renamed —
-    // rebuild it from the NEW generation (one column-pruned scan of the
-    // compacted lake), then drop the old generations' manifest files, and
-    // ONLY THEN delete the stale data objects. This ordering makes every
-    // crash point safe: before the rebuilt manifest lands, the old
-    // manifests vouch objects that all still exist; after it lands, the
-    // union vouches a superset (both generations present — duplicate rows
-    // in a mid-window snapshot read, healed by re-running compact), and
-    // once old manifests are gone the new manifest exactly matches the
-    // new generation while the not-yet-deleted stale objects are mere
-    // vacuum-able orphans. Deleting data FIRST (the old order) could
-    // leave manifests vouching deleted objects: readCommitted would fail
-    // on missing paths and vacuum would delete the new generation.
-    val oldManifests = CommitManifest.manifestFiles(spark, topicDir)
-    if (oldManifests.nonEmpty) {
-      val fresh = readLake(spark, topicDir, cfg,
-        files.map(f => (f.encodedPartition, f.fileName)))
-      // recompute cfg.statsColumns [min,max] for the NEW objects — the
-      // fresh scan already has the payload columns; dropping them here
-      // would permanently strip data-skipping stats on first compact
-      val statAggs = Seq(min(col(offsetCol)).as("start_offset"),
-        max(col(offsetCol)).as("end_offset"),
-        count(lit(1)).as("record_count")) ++
-        (if (cfg.statsColumns.isEmpty) Nil
-         else Seq(array(cfg.statsColumns.map(c =>
-           CommitManifest.statStruct(fresh, c)): _*).as("col_stats")))
-      val stats = fresh.groupBy(col("__epart").as("encoded_partition"),
-          col("__fname").as("fname"))
-        .agg(statAggs.head, statAggs.tail: _*)
-        .withColumn("object_key",
-          CommitManifest.objectKey(col("encoded_partition"), col("fname")))
-      val written = CommitManifest.writeStats(stats, topicDir)
+    // rebuild the manifest from the NEW generation's tags, then drop the
+    // old generations' manifest files, and ONLY THEN delete the stale data
+    // objects. This ordering makes every crash point safe: before the
+    // rebuilt manifest lands, the old manifests vouch objects that all
+    // still exist; after it lands, the union vouches a superset (both
+    // generations present — duplicate rows in a mid-window snapshot read,
+    // healed by re-running compact), and once old manifests are gone the
+    // new manifest exactly matches the new generation while the
+    // not-yet-deleted stale objects are mere vacuum-able orphans. Deleting
+    // data FIRST could leave manifests vouching deleted objects:
+    // readCommitted would fail on missing paths and vacuum would delete
+    // the new generation.
+    CommitManifest.writeGeneration(spark, topicDir, tags).foreach { written =>
       val mfs = new Path(topicDir)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
       // compare by file name — listStatus paths carry a scheme, the

@@ -1,7 +1,12 @@
 package graft.ingest
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Declarative partitioner configuration — the Spark equivalent of the
   * reference's `partitioner.class` + related keys (S3SinkConnectorConfig
@@ -120,27 +125,28 @@ object Ingest {
     val labeledGroups = timeGroup ++ extraCauseGroups
     val grouped = IngestWriter.group(framed, cfg, encoded, kafkaPartition,
       offset, labeledGroups.map(_._2))
-    // manifest stats and per-cause diagnostics read the grouping again
-    // after the write; without a persist each would re-read the SOURCE (in
-    // foreachBatch the batch is a plan over source files) and re-shuffle.
-    // Scoped: the cache lives exactly as long as the passes that share it,
-    // so BATCH callers looping Ingest.run leak nothing.
-    val (files, byCause) = graft.analytics.Caches.scoped {
+    // per-cause diagnostics read the grouping again after the write;
+    // without a persist they would re-read the SOURCE (in foreachBatch the
+    // batch is a plan over source files) and re-shuffle. The manifest
+    // needs no second read: the write pass tallies its tags. Scoped: the
+    // cache lives exactly as long as the passes that share it, so BATCH
+    // callers looping Ingest.run leak nothing.
+    val (files, tags, byCause) = graft.analytics.Caches.scoped {
       val shared =
-        if (writeManifest || causeStats)
-          graft.analytics.Caches.persist(grouped)
-        else grouped
-      val written = IngestWriter.writeGroups(shared, cfg, outDir,
-        kafkaPartition, offset, IngestWriter.views(cfg, payloadCols))
+        if (causeStats) graft.analytics.Caches.persist(grouped) else grouped
+      val (written, tags) = IngestWriter.writeGroups(shared, cfg, outDir,
+        kafkaPartition, offset, IngestWriter.views(cfg, payloadCols),
+        tagged = writeManifest)
       val causes =
         if (causeStats)
           RotationStats.causes(shared, cfg, kafkaPartition, labeledGroups)
         else Map.empty[String, Long]
-      fence.foreach { case (f, e) => f.check(e) }
-      if (writeManifest)
-        CommitManifest.write(shared, cfg, outDir, kafkaPartition, offset)
-      (written, causes)
+      (written, tags, causes)
     }
+    fence.foreach { case (f, e) => f.check(e) }
+    if (writeManifest)
+      CommitManifest.writeGeneration(frame.sparkSession,
+        s"$outDir/${cfg.topicsDir}/${cfg.topic}", tags)
     val stats = RotationStats.of(files).copy(byCause = byCause)
     Result(files, stats, reportedNulls)
   }
@@ -298,11 +304,18 @@ object RotationStats {
 }
 
 /** W10 object tagging (TopicPartitionWriter.java:955-1102): the reference
-  * tags each committed object with startOffset/endOffset/recordCount. S3
-  * object tags are an S3-API feature; the engine-level equivalent is a
-  * commit manifest — one JSON line per object with the same fields —
+  * tags each committed object with startOffset/endOffset/recordCount from
+  * the writer's own counters. S3 object tags are an S3-API feature; the
+  * engine-level equivalent is a commit manifest — one JSON line per object
+  * with the same fields (plus the configured stats columns' [min, max]) —
   * written next to the data under `_graft_manifest/`. Downstream consumers
   * get the exactly-once audit trail without re-listing objects.
+  *
+  * The tags are counted where the bytes are written: the write pass feeds
+  * every row of a value object through a [[Tally]] and returns the
+  * object's manifest row with its `FileInfo`. The driver then writes the
+  * batch's generation from those rows ([[writeGeneration]]) — no Spark
+  * job, no cache, no read-back.
   *
   * Manifests are PER-BATCH generations,
   * `commit-<minOffset>-<maxOffset>-<keySetHash>.json`: the name derives
@@ -316,53 +329,82 @@ object RotationStats {
   * committed objects as orphans. The union of all `commit-*.json` files
   * vouches for the whole lake. */
 object CommitManifest {
-  /** One generation over the writer's grouping (`IngestWriter.group`). */
-  private[ingest] def write(grouped: DataFrame, cfg: IngestConfig,
-                            outDir: String, kafkaPartition: Column,
-                            offset: Column): String = {
-    // per-object [min,max] of the configured stats columns ride the
-    // same aggregate — zero extra passes; the static double/string lane
-    // pair keeps the manifest schema identical across lakes with
-    // different stats configs
-    val statAggs = Seq(max(offset).as("end_offset"),
-      count(lit(1)).as("record_count")) ++
-      (if (cfg.statsColumns.isEmpty) Nil
-       else Seq(array(cfg.statsColumns.map(c =>
-         statStruct(grouped, c)): _*).as("col_stats")))
-    val stats = grouped
-      .groupBy(col("__epart").as("encoded_partition"),
-        kafkaPartition.as("kafka_partition"),
-        col(Rotation.StartOffsetCol).as("start_offset"))
-      .agg(statAggs.head, statAggs.tail: _*)
-      .withColumn("object_key", objectKey(col("encoded_partition"),
-        FileNaming.fileName(lit(cfg.topic), col("kafka_partition"),
-          col("start_offset"), cfg.extension, cfg.padWidth)))
-    writeStats(stats, s"$outDir/${cfg.topicsDir}/${cfg.topic}")
-  }
 
-  /** One configured column's per-object [min,max] stat struct: STRING
-    * columns ride the string lanes (text lakes key on ids and
-    * dates-as-strings more than numerics), everything else casts to the
-    * double lanes as before. The unused lanes are null — to_json drops
-    * them on write and they fail open on read, so old four-lane
-    * manifests and stat-less generations stay readable. */
-  private[ingest] def statStruct(df: DataFrame, c: String): Column =
-    if (df.schema(c).dataType == org.apache.spark.sql.types.StringType)
-      struct(lit(c).as("c"),
-        lit(null).cast("double").as("lo"),
-        lit(null).cast("double").as("hi"),
-        min(col(c)).as("slo"), max(col(c)).as("shi"))
-    else
-      struct(lit(c).as("c"),
-        min(col(c)).cast("double").as("lo"),
-        max(col(c)).cast("double").as("hi"),
-        lit(null).cast("string").as("slo"),
-        lit(null).cast("string").as("shi"))
+  /** Counts one object at a time, row by row, inside the write pass, into
+    * its manifest row ([[ManifestSchema]]). From index `at` a row carries
+    * the offset, the group's start offset, then one lane per `(column,
+    * isString)` of `lanes`: the string itself, or the column cast to
+    * double. Each stats column gets a `(c, lo, hi, slo, shi)` struct:
+    * STRING columns ride the string lanes (text lakes key on ids and
+    * dates-as-strings more than numerics), everything else the double
+    * lanes. The unused lanes are null — to_json drops them on write and
+    * they fail open on read, so old four-lane manifests and stat-less
+    * generations stay readable. Min/max are Spark's `min`/`max`: nulls are
+    * skipped (an all-null column leaves null lanes), NaN orders above every
+    * number, -0.0 equals 0.0 (the first seen stays), strings compare by
+    * UTF-8 bytes. */
+  private[ingest] final class Tally(lanes: Seq[(String, Boolean)], at: Int) {
+    private val names = lanes.map(_._1).toArray
+    private val isString = lanes.map(_._2).toArray
+    private val lo = new Array[Double](names.length)
+    private val hi = new Array[Double](names.length)
+    private val seen = new Array[Boolean](names.length)
+    private val slo = new Array[UTF8String](names.length)
+    private val shi = new Array[UTF8String](names.length)
+    private var start = 0L
+    private var end = 0L
+    private var count = 0L
+
+    def add(r: InternalRow): Unit = {
+      val o = r.getLong(at)
+      if (count == 0) { start = r.getLong(at + 1); end = o }
+      else if (o > end) end = o
+      count += 1
+      var i = 0
+      while (i < names.length) {
+        val j = at + 2 + i
+        if (r.isNullAt(j)) ()
+        else if (isString(i)) {
+          val s = r.getUTF8String(j)
+          if (slo(i) == null || s.compareTo(slo(i)) < 0) slo(i) = s.clone()
+          if (shi(i) == null || s.compareTo(shi(i)) > 0) shi(i) = s.clone()
+        } else {
+          val d = r.getDouble(j)
+          if (!seen(i) || SQLOrderingUtil.compareDoubles(d, lo(i)) < 0)
+            lo(i) = d
+          if (!seen(i) || SQLOrderingUtil.compareDoubles(d, hi(i)) > 0)
+            hi(i) = d
+          seen(i) = true
+        }
+        i += 1
+      }
+    }
+
+    /** The manifest row of the rows added since the last close; the next
+      * row starts a new object. */
+    def close(objectKey: String): Row = {
+      val stats = names.indices.map { i =>
+        val (l, h) = if (seen(i)) (lo(i), hi(i)) else (null, null)
+        Row(names(i), l, h, Option(slo(i)).map(_.toString).orNull,
+          Option(shi(i)).map(_.toString).orNull)
+      }
+      java.util.Arrays.fill(seen, false)
+      java.util.Arrays.fill(slo.asInstanceOf[Array[AnyRef]], null)
+      java.util.Arrays.fill(shi.asInstanceOf[Array[AnyRef]], null)
+      val tags = Row(objectKey, start, end, count,
+        if (names.isEmpty) null else stats)
+      count = 0
+      tags
+    }
+  }
 
   /** Root-level objects key as the bare file name (no leading slash) —
     * the same relative key a recursive listing produces. */
   private[ingest] def objectKey(epart: Column, fname: Column): Column =
     when(epart === "", fname).otherwise(concat(epart, lit("/"), fname))
+
+  private[ingest] def objectKey(epart: String, fname: String): String =
+    if (epart.isEmpty) fname else s"$epart/$fname"
 
   private[ingest] val ManifestSchema =
     "object_key STRING, start_offset LONG, end_offset LONG, " +
@@ -370,60 +412,76 @@ object CommitManifest {
       "col_stats ARRAY<STRUCT<c: STRING, lo: DOUBLE, hi: DOUBLE, " +
       "slo: STRING, shi: STRING>>"
 
-  /** Stream a stats frame (encoded_partition, start_offset, end_offset,
-    * record_count, object_key) to `commit-<min>-<max>-<keyhash>.json`
-    * under the topic's manifest dir. Serialized task-side via to_json
-    * (proper escaping of arbitrary partition-field values in object_key)
-    * and streamed to one file — the driver never collects or loops over
-    * per-object rows, so the manifest write scales with object count like
-    * the data write does.
-    *
-    * The stats plan executes exactly ONCE (the text write); the offset
-    * range and the order-independent key-set hash that name the file come
-    * from reading back the single written part file — a metadata-scale
-    * read, not a second pass over the lake. The final placement is an
-    * ATOMIC overwrite rename (`IngestWriter.renameOver`): there is no
-    * delete-then-rename window during which `committedDf` would see no
-    * manifest for a replayed batch. */
-  private[ingest] def writeStats(stats: DataFrame,
-                                 topicDir: String): String = {
+  /** One manifest line: to_json drops null fields, so stat-less lakes
+    * keep the original four-field line format (and proper escaping of
+    * arbitrary partition-field values in object_key comes for free). */
+  private val line = to_json(struct(col("object_key"), col("start_offset"),
+    col("end_offset"), col("record_count"), col("col_stats")))
+
+  /** bit_xor(xxhash64(object_key)) is an order-independent, overflow-free
+    * 64-bit digest of the key set (keys are unique per batch, so no XOR
+    * self-cancellation) — two batches share a name iff they vouch the
+    * same objects, which is exactly the replay case. */
+  private def generationName(start: Long, end: Long, keyHash: Long): String =
+    s"commit-$start-$end-${java.lang.Long.toHexString(keyHash)}.json"
+
+  /** Write one batch's generation from its manifest rows (one per value
+    * object, from the write pass's [[Tally]]) and return its path; a batch
+    * that wrote no object writes no generation. The lines are
+    * `to_json` over a local relation — a projection Spark evaluates on
+    * the driver, with no job — sorted by object-key bytes. The file lands
+    * as `.<name>.tmp` and is renamed over its final name
+    * (`IngestWriter.renameOver`), so there is no window in which
+    * `committedDf` sees no manifest for a replayed batch, and a replay
+    * after a crash overwrites its own leftover temp. */
+  private[ingest] def writeGeneration(spark: SparkSession, topicDir: String,
+                                      tags: Seq[Row]): Option[String] =
+    if (tags.isEmpty) None
+    else {
+      val lines = spark.createDataFrame(java.util.Arrays.asList(tags: _*),
+          StructType.fromDDL(ManifestSchema))
+        .select(col("object_key"), line, xxhash64(col("object_key")))
+        .collect().sortBy(r => UTF8String.fromString(r.getString(0)))
+      val name = generationName(tags.map(_.getLong(1)).min,
+        tags.map(_.getLong(2)).max, lines.map(_.getLong(2)).reduce(_ ^ _))
+      val dir = new Path(s"$topicDir/_graft_manifest")
+      val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val (tmp, dest) = (new Path(dir, s".$name.tmp"), new Path(dir, name))
+      val os = fs.create(tmp, true)
+      try lines.foreach(r => os.write(s"${r.getString(1)}\n".getBytes("UTF-8")))
+      finally os.close()
+      IngestWriter.renameOver(fs, tmp, dest)
+      Some(dest.toString)
+    }
+
+  /** Write a distributed stats frame (`object_key, start_offset,
+    * end_offset, record_count, col_stats`) as one generation under the
+    * topic's manifest dir: `compactManifests`' merge over all
+    * generations, which stays distributed. The lines are serialized
+    * task-side and streamed to one part file, sorted inside its single
+    * task (a global orderBy would add a range-sampling job); the offset
+    * range and key-set hash that name the file come from reading back
+    * that one file, and it is renamed over its final name. */
+  private def writeStats(stats: DataFrame, topicDir: String): String = {
     val spark = stats.sparkSession
-    val withStats =
-      if (stats.columns.contains("col_stats")) stats
-      else stats.withColumn("col_stats",
-        lit(null).cast("array<struct<c: string, lo: double, hi: double, " +
-          "slo: string, shi: string>>"))
-    // one part file, sorted inside its single task (a global orderBy
-    // would add a range-partitioning sample job); to_json drops null
-    // fields, so stat-less lakes keep the original four-field line format
-    val jsonLines = withStats.coalesce(1)
+    val jsonLines = stats.coalesce(1)
       .sortWithinPartitions(col("object_key"))
-      .select(to_json(struct(
-        col("object_key"), col("start_offset"), col("end_offset"),
-        col("record_count"), col("col_stats"))).as("value"))
+      .select(line.as("value"))
     val manifestDir = s"$topicDir/_graft_manifest"
     val tmp = s"$manifestDir/_tmp"
     jsonLines.write.mode("overwrite").text(tmp)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val tmpPath = new org.apache.hadoop.fs.Path(tmp)
-    val fs = tmpPath.getFileSystem(conf)
+    val tmpPath = new Path(tmp)
+    val fs = tmpPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val part = fs.listStatus(tmpPath)
       .filter(s => s.isFile && s.getPath.getName.startsWith("part-"))
     require(part.length == 1, s"expected 1 manifest part, got ${part.length}")
-    // name ingredients from the written file (one small read; the batch
-    // plan above is not re-executed). bit_xor(xxhash64) is an
-    // order-independent, overflow-free 64-bit digest of the key set
-    // (keys are unique per batch, so no XOR self-cancellation) — two
-    // batches share a name iff they vouch the same objects, which is
-    // exactly the replay case.
     val row = spark.read.schema(ManifestSchema)
       .json(part.head.getPath.toString)
       .agg(min(col("start_offset")), max(col("end_offset")),
         bit_xor(xxhash64(col("object_key")))).head
     require(!row.isNullAt(0), "manifest stats are empty")
-    val keyHash = java.lang.Long.toHexString(row.getLong(2))
-    val dest = new org.apache.hadoop.fs.Path(
-      s"$manifestDir/commit-${row.getLong(0)}-${row.getLong(1)}-$keyHash.json")
+    val dest = new Path(manifestDir,
+      generationName(row.getLong(0), row.getLong(1), row.getLong(2)))
     IngestWriter.renameOver(fs, part.head.getPath, dest)
     fs.delete(tmpPath, true)
     dest.toString
@@ -438,7 +496,7 @@ object CommitManifest {
     * are possible; key-level consumers must de-duplicate. Returns None
     * when no manifest exists. */
   private[ingest] def committedDf(
-      spark: org.apache.spark.sql.SparkSession,
+      spark: SparkSession,
       topicDir: String): Option[DataFrame] = {
     val parts = manifestFiles(spark, topicDir)
     if (parts.isEmpty) None
@@ -455,7 +513,7 @@ object CommitManifest {
     * old generations are deleted after — an interruption leaves duplicate
     * vouching (harmless; consumers distinct), never a vouching deficit.
     * Returns the number of old generation files removed. */
-  def compactManifests(spark: org.apache.spark.sql.SparkSession,
+  def compactManifests(spark: SparkSession,
                        topicDir: String): Int = {
     val files = manifestFiles(spark, topicDir)
     if (files.lengthCompare(1) <= 0) return 0
@@ -470,8 +528,8 @@ object CommitManifest {
       .select(col("object_key"), col("__r.start_offset"),
         col("__r.end_offset"), col("__r.record_count"), col("__r.col_stats"))
     val written = writeStats(merged, topicDir)
-    val writtenName = new org.apache.hadoop.fs.Path(written).getName
-    val fs = new org.apache.hadoop.fs.Path(topicDir)
+    val writtenName = new Path(written).getName
+    val fs = new Path(topicDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val stale = files.filter(_.getName != writtenName)
     stale.foreach(p => fs.delete(p, false))
@@ -480,9 +538,9 @@ object CommitManifest {
 
   /** Paths of all current manifest generation files. */
   private[ingest] def manifestFiles(
-      spark: org.apache.spark.sql.SparkSession,
-      topicDir: String): Seq[org.apache.hadoop.fs.Path] = {
-    val dir = new org.apache.hadoop.fs.Path(s"$topicDir/_graft_manifest")
+      spark: SparkSession,
+      topicDir: String): Seq[Path] = {
+    val dir = new Path(s"$topicDir/_graft_manifest")
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(dir)) Nil
     else fs.listStatus(dir).map(_.getPath)

@@ -6,13 +6,13 @@ import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptContext, TaskAttemptI
 import org.apache.hadoop.mapred.JobConf
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.execution.datasources.{OutputWriter, OutputWriterFactory}
 import org.apache.spark.sql.execution.datasources.json.JsonFileFormat
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, StructType}
+import org.apache.spark.sql.types.{DecimalType, StringType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
 
@@ -35,7 +35,8 @@ import scala.jdk.CollectionConverters._
   * :63-144), each object under a temp name unique to the task attempt,
   * renamed onto its final key when the group closes: the commit happens in
   * the task, with no staging dir and no promote job. Deterministic names
-  * make replay idempotent (X1).
+  * make replay idempotent (X1). The same pass tallies each value object's
+  * W10 manifest tags ([[CommitManifest.Tally]]) when asked.
   */
 object IngestWriter {
 
@@ -78,7 +79,7 @@ object IngestWriter {
                extraFileGroups: Seq[Column] = Nil): Seq[FileInfo] =
     writeGroups(group(df, cfg, encodedPartition, kafkaPartition, offset,
       extraFileGroups), cfg, outDir, kafkaPartition, offset,
-      views(cfg, valueCols))
+      views(cfg, valueCols))._1
 
   /** The views `cfg` stores: the value, plus `.keys` and `.headers` when
     * `store.kafka.keys` / `store.kafka.headers` are on. */
@@ -115,19 +116,29 @@ object IngestWriter {
 
   /** The write pass over a [[group]]ed frame: every view of every file
     * group, one task-side pass, committed at the final keys. Returns the
-    * objects, the value view's first, each view's by key. */
+    * objects, the value view's first, each view's by key; and, when
+    * `tagged`, each value object's W10 manifest row over
+    * `cfg.statsColumns`. */
   private[ingest] def writeGroups(grouped: DataFrame, cfg: IngestConfig,
                                   outDir: String, kafkaPartition: Column,
-                                  offset: Column,
-                                  views: Seq[View]): Seq[FileInfo] = {
+                                  offset: Column, views: Seq[View],
+                                  tagged: Boolean = false)
+      : (Seq[FileInfo], Seq[Row]) = {
     val spark = grouped.sparkSession
+    // what the tally reads behind the views: the offset, the group's start
+    // offset and one lane per stats column (CommitManifest.Tally)
+    val lanes = Option.when(tagged)(cfg.statsColumns.map(c =>
+      c -> (grouped.schema(c).dataType == StringType)))
+    val tagCols = lanes.toSeq.flatMap(ls =>
+      offset.cast("long") +: col(Rotation.StartOffsetCol).cast("long") +:
+        ls.map { case (c, str) => if (str) col(c) else col(c).cast("double") })
     val arranged = grouped
       .sortWithinPartitions(col(KeyCol), offset)
       .select((col(EpartCol) +: FileNaming.fileName(lit(cfg.topic),
           kafkaPartition, col(Rotation.StartOffsetCol), "", cfg.padWidth)
           .as(BaseCol) +:
         views.zipWithIndex.map { case (v, i) =>
-          viewStruct(grouped, v).as(s"__view$i") }): _*)
+          viewStruct(grouped, v).as(s"__view$i") }) ++ tagCols: _*)
     val schemas = views.indices.map(i =>
       arranged.schema(i + 2).dataType.asInstanceOf[StructType])
     val base = spark.sparkContext.hadoopConfiguration
@@ -137,11 +148,13 @@ object IngestWriter {
     val topicDir = s"$outDir/${cfg.topicsDir}/${cfg.topic}"
     // one Hadoop conf per task; each view ships only what it adds to it
     val conf = new SerializableConfiguration(base)
-    val infos = arranged.queryExecution.toRdd.mapPartitions { rows =>
-      new GroupPass(topicDir, exts, factories, schemas, conf.value).run(rows)
+    val written = arranged.queryExecution.toRdd.mapPartitions { rows =>
+      new GroupPass(topicDir, exts, factories, schemas, conf.value,
+        lanes.map(new CommitManifest.Tally(_, exts.size + 2))).run(rows)
     }.collect().toSeq
-    infos.sortBy { case (view, f) => (view, f.encodedPartition, f.fileName) }
-      .map(_._2)
+    (written.sortBy { case (view, f, _) =>
+      (view, f.encodedPartition, f.fileName) }.map(_._2),
+      written.flatMap(_._3))
   }
 
   /** A view's columns as one struct, named as a `select` of them would
@@ -187,11 +200,13 @@ object IngestWriter {
   }
 
   /** One task's write pass. Rows arrive as `(__epart, __fbase, view
-    * structs...)`, each file group contiguous and in offset order. */
+    * structs..., tally lanes...)`, each file group contiguous and in
+    * offset order. */
   private final class GroupPass(
       topicDir: String, exts: Seq[String],
       factories: Seq[(OutputWriterFactory, Map[String, String])],
-      schemas: Seq[StructType], conf: Configuration) {
+      schemas: Seq[StructType], conf: Configuration,
+      tally: Option[CommitManifest.Tally]) {
     private val fs = new Path(topicDir).getFileSystem(conf)
     private val tag = java.util.UUID.randomUUID().toString
     private val contexts = factories.map { case (_, settings) =>
@@ -202,13 +217,14 @@ object IngestWriter {
         new JobID("graft", tc.stageId()), TaskType.MAP, tc.partitionId()),
         tc.attemptNumber()))
     }
-    private val out =
-      scala.collection.mutable.ArrayBuffer.empty[(Int, FileInfo)]
+    private val out = scala.collection.mutable.ArrayBuffer
+      .empty[(Int, FileInfo, Option[Row])]
     private val committed = scala.collection.mutable.Set.empty[Path]
     private var epart: String = _
     private var open: Array[(OutputWriter, Path, Path)] = Array.empty
 
-    def run(rows: Iterator[InternalRow]): Iterator[(Int, FileInfo)] = {
+    def run(rows: Iterator[InternalRow])
+        : Iterator[(Int, FileInfo, Option[Row])] = {
       var curEpart: UTF8String = null
       var curBase: UTF8String = null
       try {
@@ -223,6 +239,7 @@ object IngestWriter {
           }
           open.indices.foreach(i =>
             open(i)._1.write(r.getStruct(i + 2, schemas(i).length)))
+          tally.foreach(_.add(r))
         }
         commit()
         sweep()
@@ -249,7 +266,10 @@ object IngestWriter {
       open.zipWithIndex.foreach { case ((_, tmp, dest), i) =>
         renameOver(fs, tmp, dest)
         committed += dest
-        out += (i -> FileInfo(epart, dest.getName, dest.toString))
+        out += ((i, FileInfo(epart, dest.getName, dest.toString),
+          if (i == 0)
+            tally.map(_.close(CommitManifest.objectKey(epart, dest.getName)))
+          else None))
       }
       open = Array.empty
     }

@@ -716,4 +716,64 @@ class CompactionSpec extends SparkSuite {
     assert(Compaction.vacuum(spark, out, cfg).orphans.isEmpty)
     assert(spark.read.parquet(s"$out/topics/cmv").count() == 60)
   }
+
+  test("the manifest compaction rebuilds from the write pass's tags " +
+    "equals, line for line, one recomputed by scanning the new generation") {
+    val out = freshDir()
+    val cfg = IngestConfig(topic = "ctag", flushSize = 5,
+      statsColumns = Seq("score", "name", "offset"))
+    val df = Seq(0, 1).flatMap { kp =>
+      (0L until 24L).map { i =>
+        val o = kp * 100L + i
+        (kp, o,
+          if (i % 7 == 3) null
+          else if (i % 11 == 5) java.lang.Double.valueOf(Double.NaN)
+          else java.lang.Double.valueOf((i * 37 % 13) - 6.5),
+          if (i % 5 == 0) null else s"n${(i * 7) % 10}\u00e9",
+          s"t${i % 2}")
+      }
+    }.toDF("kafka_partition", "offset", "score", "name", "event_type")
+    Ingest.run(df, cfg, PartitionerSpec.Fields(Seq("event_type")), out,
+      payloadCols = Seq(col("offset"), col("score"), col("name"),
+        col("event_type")),
+      writeManifest = true)
+    val r = Compaction.compact(spark, out, cfg, targetRecords = 8)
+    val topicDir = s"$out/topics/ctag"
+    val gens = new java.io.File(s"$topicDir/_graft_manifest").listFiles()
+      .map(_.getName).filter(n => n.startsWith("commit-") &&
+        n.endsWith(".json"))
+    assert(gens.length == 1, gens.toSeq)
+    // the recomputation: one aggregate over a scan of the new objects
+    val fresh = Compaction.readLake(spark, topicDir, cfg,
+      r.files.map(f => (f.encodedPartition, f.fileName)))
+    val stat = (c: String) =>
+      if (c == "name")
+        struct(lit(c).as("c"), lit(null).cast("double").as("lo"),
+          lit(null).cast("double").as("hi"), min(col(c)).as("slo"),
+          max(col(c)).as("shi"))
+      else
+        struct(lit(c).as("c"), min(col(c)).cast("double").as("lo"),
+          max(col(c)).cast("double").as("hi"),
+          lit(null).cast("string").as("slo"),
+          lit(null).cast("string").as("shi"))
+    val scanned = fresh.groupBy(col("__epart"), col("__fname"))
+      .agg(min(col("offset")).as("start_offset"),
+        max(col("offset")).as("end_offset"),
+        count(lit(1)).as("record_count"),
+        array(cfg.statsColumns.map(stat): _*).as("col_stats"))
+      .withColumn("object_key", concat(col("__epart"), lit("/"),
+        col("__fname")))
+    val want = scanned.orderBy("object_key")
+      .select(to_json(struct(col("object_key"), col("start_offset"),
+        col("end_offset"), col("record_count"), col("col_stats"))))
+      .as[String].collect().toSeq
+    val name = scanned.agg(min("start_offset"), max("end_offset"),
+        bit_xor(xxhash64(col("object_key")))).head
+    assert(gens.head == s"commit-${name.getLong(0)}-${name.getLong(1)}-" +
+      s"${java.lang.Long.toHexString(name.getLong(2))}.json")
+    val got = scala.io.Source.fromFile(s"$topicDir/_graft_manifest/" +
+      gens.head, "UTF-8").getLines().toSeq
+    assert(want.size == r.files.size)
+    assert(got == want)
+  }
 }

@@ -166,4 +166,99 @@ class IngestSpec extends SparkSuite {
     assert(ordersBack.count() == 6 && clicksBack.count() == 6)
     assert(ordersBack.select("offset").as[Long].collect().forall(_ % 2 == 0))
   }
+
+  /** Every W10 lane at once: two Kafka partitions rotated at flush.size 4;
+    * stats on a double with nulls and a NaN (one object all-null), a
+    * string with nulls and multi-byte UTF-8, a long near 1e13 and the
+    * offset. */
+  private def laneFrame = {
+    val scores = Seq[java.lang.Double](1.5, null, Double.NaN, -2.25,
+      null, null, null, null, 3.0, 0.5)
+    val names = Seq("b", "a", null, "\u00e9", null, "Z", "zz", "a", null,
+      null)
+    Seq(0, 1).flatMap { kp =>
+      (0 until 10).map { i =>
+        val o = kp * 30L + i
+        (kp, o, scores((i + kp * 3) % 10), names((i + kp) % 10),
+          10000000000000L + o * 7919L)
+      }
+    }.toDF("kafka_partition", "offset", "score", "name", "big")
+  }
+
+  private val laneCfg = IngestConfig(topic = "lanes", flushSize = 4,
+    statsColumns = Seq("score", "name", "big", "offset"))
+
+  private def runLanes(out: String, writeManifest: Boolean) =
+    Ingest.run(laneFrame, laneCfg, PartitionerSpec.Default, out,
+      payloadCols = Seq(col("offset"), col("score"), col("name"),
+        col("big")),
+      writeManifest = writeManifest)
+
+  private def manifestGenerations(topicDir: String) =
+    Option(new java.io.File(s"$topicDir/_graft_manifest").listFiles())
+      .toSeq.flatten.map(_.getName)
+      .filter(n => n.startsWith("commit-") && n.endsWith(".json")).sorted
+
+  private val GoldenName = "commit-0-39-24053caa3989958b.json"
+  private val GoldenLines = Seq(
+    """{"object_key":"partition=0/lanes+0+0000000000.parquet","start_offset":0,"end_offset":3,"record_count":4,"col_stats":[{"c":"score","lo":-2.25,"hi":"NaN"},{"c":"name","slo":"a","shi":"é"},{"c":"big","lo":1.0E13,"hi":1.0000000023757E13},{"c":"offset","lo":0.0,"hi":3.0}]}""",
+    """{"object_key":"partition=0/lanes+0+0000000004.parquet","start_offset":4,"end_offset":7,"record_count":4,"col_stats":[{"c":"score"},{"c":"name","slo":"Z","shi":"zz"},{"c":"big","lo":1.0000000031676E13,"hi":1.0000000055433E13},{"c":"offset","lo":4.0,"hi":7.0}]}""",
+    """{"object_key":"partition=0/lanes+0+0000000008.parquet","start_offset":8,"end_offset":9,"record_count":2,"col_stats":[{"c":"score","lo":0.5,"hi":3.0},{"c":"name"},{"c":"big","lo":1.0000000063352E13,"hi":1.0000000071271E13},{"c":"offset","lo":8.0,"hi":9.0}]}""",
+    """{"object_key":"partition=1/lanes+1+0000000030.parquet","start_offset":30,"end_offset":33,"record_count":4,"col_stats":[{"c":"score","lo":-2.25,"hi":-2.25},{"c":"name","slo":"a","shi":"é"},{"c":"big","lo":1.000000023757E13,"hi":1.0000000261327E13},{"c":"offset","lo":30.0,"hi":33.0}]}""",
+    """{"object_key":"partition=1/lanes+1+0000000034.parquet","start_offset":34,"end_offset":37,"record_count":4,"col_stats":[{"c":"score","lo":0.5,"hi":3.0},{"c":"name","slo":"Z","shi":"zz"},{"c":"big","lo":1.0000000269246E13,"hi":1.0000000293003E13},{"c":"offset","lo":34.0,"hi":37.0}]}""",
+    """{"object_key":"partition=1/lanes+1+0000000038.parquet","start_offset":38,"end_offset":39,"record_count":2,"col_stats":[{"c":"score","lo":"NaN","hi":"NaN"},{"c":"name","slo":"b","shi":"b"},{"c":"big","lo":1.0000000300922E13,"hi":1.0000000308841E13},{"c":"offset","lo":38.0,"hi":39.0}]}""")
+
+  test("W10 golden manifest: generation name and line bytes are fixed " +
+    "for every stats lane (existing lakes and X1 replay depend on them)") {
+    val out = freshDir()
+    runLanes(out, writeManifest = true)
+    val dir = s"$out/topics/lanes"
+    assert(manifestGenerations(dir) == Seq(GoldenName))
+    val bytes = Files.readAllBytes(
+      java.nio.file.Paths.get(s"$dir/_graft_manifest/$GoldenName"))
+    assert(new String(bytes, "UTF-8") == GoldenLines.map(_ + "\n").mkString)
+  }
+
+  test("an empty batch with writeManifest writes no object and no " +
+    "generation, and returns an empty Result") {
+    val out = freshDir()
+    val empty = laneFrame.filter(lit(false))
+    val result = Ingest.run(empty, laneCfg, PartitionerSpec.Default, out,
+      payloadCols = Seq(col("offset"), col("score")), writeManifest = true)
+    assert(result.files.isEmpty)
+    assert(result.stats.totalFiles == 0)
+    assert(manifestGenerations(s"$out/topics/lanes").isEmpty)
+  }
+
+  test("the commit manifest starts no Spark job of its own") {
+    // count only jobs started from this thread: a stream another spec
+    // left running must not count
+    val mark = "graft.spec.countJobs"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty(mark) != null))
+          jobs.incrementAndGet()
+    }
+    def jobsOf(writeManifest: Boolean): Int = {
+      val out = freshDir()
+      jobs.set(0)
+      runLanes(out, writeManifest)
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      jobs.get()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    spark.sparkContext.setLocalProperty(mark, "on")
+    try {
+      jobsOf(writeManifest = true) // warm-up
+      val plain = jobsOf(writeManifest = false)
+      val manifested = jobsOf(writeManifest = true)
+      assert(plain > 0)
+      assert(manifested <= plain, s"manifest added ${manifested - plain} jobs")
+    } finally {
+      spark.sparkContext.setLocalProperty(mark, null)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+  }
 }

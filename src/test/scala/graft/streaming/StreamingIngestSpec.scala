@@ -124,6 +124,39 @@ class StreamingIngestSpec extends SparkSuite {
       "commit manifest missing")
   }
 
+  test("a micro-batch the gates drop entirely writes no manifest " +
+    "generation and the manifest-writing stream carries on") {
+    val src = Files.createTempDirectory("gated_src").toString
+    val out = Files.createTempDirectory("gated_out").toString
+    val ckpt = Files.createTempDirectory("gated_ckpt").toString
+    // batch 1 is all negative values, which the gate drops
+    Seq(1.0, -1.0, 1.0).zipWithIndex.foreach { case (sign, b) =>
+      (0L until 4L).map(i => (0, b * 4 + i, s"t${i % 2}", sign * (i + 1)))
+        .toDF("kafka_partition", "offset", "event_type", "value")
+        .coalesce(1).write.mode("append").parquet(src)
+    }
+    val stream = spark.readStream.schema(schema)
+      .option("maxFilesPerTrigger", 1).parquet(src)
+    val q = StreamingIngest.startPipeline(stream,
+      IngestConfig(topic = "gd", flushSize = 100),
+      PartitionerSpec.Fields(Seq("event_type")), out, ckpt,
+      col("kafka_partition"), col("offset"),
+      payloadCols = Seq(col("offset"), col("event_type"), col("value")),
+      writeManifest = true,
+      gates = Seq(_.filter(col("value") > 0)))
+    assert(q.awaitTermination(60000), "stream did not finish")
+    assert(q.exception.isEmpty, q.exception.toString)
+    assert(q.recentProgress.count(_.numInputRows > 0) == 3)
+    val back = spark.read.parquet(s"$out/topics/gd/event_type=*")
+    assert(back.select("offset").as[Long].collect().sorted.toSeq ==
+      ((0L until 4L) ++ (8L until 12L)))
+    val gens = new java.io.File(s"$out/topics/gd/_graft_manifest")
+      .listFiles().map(_.getName)
+      .filter(n => n.startsWith("commit-") && n.endsWith(".json"))
+    assert(gens.sorted.map(_.split("-").take(3).mkString("-")).toSeq ==
+      Seq("commit-0-3", "commit-8-11"))
+  }
+
   test("composable gate stack (k-means cluster + classifier + quality) " +
     "over micro-batches keeps EXACTLY the batch pipeline's rows — frozen " +
     "models make stream == batch") {
